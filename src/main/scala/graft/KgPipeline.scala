@@ -4,6 +4,7 @@ import graft.core.{Rules, TableIO}
 import graft.stages._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SharedRows
 
 /** End-to-end KG-construction dataflow (the north star):
   *
@@ -27,8 +28,18 @@ object KgPipeline {
       .filter(col("s.kind") === "text" && col("s.text").isNotNull)
       .select(col("doc_id"), col("s.offset").as("span_offset"), col("s.text").as("text"))
 
-  /** Canonicalized distinct triple set with provenance. */
-  /** @param dimFastPaths when true, the dimension-bounded passes (KB BFS
+  /** Builds the canonicalized distinct triple set with provenance, and the
+    * vertices and edges derived from it.
+    *
+    * With `io` every stage is snapshot-committed and the outputs read the
+    * committed tables. Without it the returned `triples` is already
+    * materialized: its plan (normalize → emit → canonicalize → dedup) runs
+    * once, the dedup's map stage inside this call, and `vertices`, `edges`
+    * and `triples` all read the same shared rows. Those blocks live until
+    * the outputs are unreachable, then the ContextCleaner reaps them; a
+    * lost block is recomputed from lineage.
+    *
+    * @param dimFastPaths when true, the dimension-bounded passes (KB BFS
     *   closure, alias CC) use their driver fast paths below the collectable
     *   threshold (see KbExpand/Canon docs). The golden P/R suite runs with
     *   false — pure dataflow — so the gate never tests driver code against
@@ -55,11 +66,12 @@ object KgPipeline {
     if (sys.env.getOrElse("SPARK_GRAFT_ENTRY_GC", "1") != "0") System.gc()
 
     // Stage boundaries: snapshot commit when checkpointing. Without io the
-    // big stages stay LAZY — with single-pass triple emission each wide
-    // input is scanned at most twice, and in-memory caching of fat rows
-    // serializes local-mode tasks on the MemoryStore lock (measured: 3/32
-    // threads busy during cache build). Only the small dim-side stages
-    // (kb, canon_map) are checkpointed via `small()`.
+    // corpus-side stages (normalized docs, emitted triples) stay lazy:
+    // caching fat doc rows serializes local-mode tasks on the MemoryStore
+    // lock (measured: 3/32 threads busy during cache build). The one shared
+    // materialization is the post-dedup triple set — thin rows, read by all
+    // three outputs — so vertices and edges never re-run the corpus plan.
+    // The small dim-side stages (kb, canon_map) are checkpointed via `small()`.
     def stage(name: String, upstream: Seq[String],
               counters: => Map[String, Long] = Map.empty)
              (f: => DataFrame): DataFrame =
@@ -214,7 +226,7 @@ object KgPipeline {
           ccDriverThreshold = dimThreshold)
       }))
 
-    val triples = stage("triples", Seq("weibo_triples", "kb_triples", "canon_map")) {
+    val deduped = stage("triples", Seq("weibo_triples", "kb_triples", "canon_map")) {
       val all = Canon.canonicalize(weibo.unionByName(kbT), canonMap)
       // Two-phase dedup (SURVEY.md §4.2.5): partial hash-agg per partition,
       // then ONE shuffle hashed on the FULL (subj, pred, obj) key — never on
@@ -227,6 +239,8 @@ object KgPipeline {
         .agg(min(col("doc_id")).as("doc_id"),
           min(col("span_offset")).as("span_offset"))
     }
+    // io's commit already materialized the triples; otherwise share one run
+    val triples = if (io.isDefined) deduped else SharedRows(deduped)
 
     val labels = Canon.nodeLabels(
       Canon.canonicalize(kbT, canonMap), Rules.categoryPred)

@@ -33,9 +33,9 @@ object SparkEntry {
       val out = KgPipeline.run(s, CorpusData.docsDF(s, kgCfg),
         CorpusData.ment2entDF(s, kgCfg), CorpusData.avpairDF(s, kgCfg),
         shufflePartitions = s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      kgCache = (s, KgPipeline.Outputs(
-        out.triples.localCheckpoint(), out.vertices.localCheckpoint(),
-        out.edges.localCheckpoint()))
+      // run's lazy-mode triples are already materialized once
+      kgCache = (s, out.copy(vertices = out.vertices.localCheckpoint(),
+        edges = out.edges.localCheckpoint()))
     }
     kgCache._2
   }

@@ -9,7 +9,9 @@ import java.nio.file.Files
 /** Cross-cutting pipeline properties: the dim-side driver fast paths emit
   * exactly the dataflow paths' triples; a killed run resumes from the last
   * committed snapshot to an identical final set (BASELINE.md resumability);
-  * dedup and canonicalization are idempotent. */
+  * the lazy and checkpointed runs give identical outputs, and the lazy
+  * run's vertices/edges read its one materialized triple set; dedup and
+  * canonicalization are idempotent. */
 class KgParitySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -87,6 +89,36 @@ class KgParitySpec extends AnyFunSuite {
     assert(manifest.contains("\"upstream\""))
     assert(manifest.contains("per_partition"))
     assert(manifest.contains("\"row_count\""))
+  }
+
+  test("lazy ≡ checkpointed: identical triples (with provenance), vertices and edges") {
+    val io = new TableIO(spark, Files.createTempDirectory("kgio").toString)
+    val ck = KgPipeline.run(spark, docs, m2e, av, Some(io), 4)
+    val lz = KgPipeline.run(spark, docs, m2e, av, shufflePartitions = 4)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    for ((name, c, l) <- Seq(("triples", ck.triples, lz.triples),
+        ("vertices", ck.vertices, lz.vertices), ("edges", ck.edges, lz.edges))) {
+      val (a, b) = (rows(c), rows(l))
+      assert(a.nonEmpty && a == b,
+        s"$name: ckOnly=${(a diff b).take(3)} lazyOnly=${(b diff a).take(3)}")
+    }
+  }
+
+  test("lazy run: vertices and edges read the shared triple rows, not the docs plan") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val d = docs
+    val out = KgPipeline.run(spark, d, m2e, av, shufflePartitions = 4)
+    val shared = out.triples.queryExecution.optimizedPlan.collectLeaves()
+      .collect { case r: LogicalRDD => r.rdd }
+    assert(shared.size == 1, "lazy triples are not one materialized relation")
+    val docLeaves = d.queryExecution.optimizedPlan.collectLeaves()
+    for ((name, df) <- Seq(("vertices", out.vertices), ("edges", out.edges))) {
+      val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+      assert(leaves.exists { case r: LogicalRDD => r.rdd eq shared.head; case _ => false },
+        s"$name does not read the shared triple rows")
+      assert(!leaves.exists(l => docLeaves.exists(_.sameResult(l))),
+        s"$name recomputes the triples from the docs")
+    }
   }
 
   test("dedup + canonicalization idempotence: running twice = once") {
