@@ -25,14 +25,13 @@ object CrawlMain {
   def run(spark: SparkSession, rules: Rules.PipelineRules, cfg: Corpus.Config)
       : (DataFrame, DataFrame, DataFrame) = {
     val dict = CorpusData.ment2entDF(spark, cfg)
-    val mentions = Mentions.detect(spark,
-      KgPipeline.textSpans(CorpusData.docsDF(spark, cfg)),
-      dict.select("mention").distinct().collect().map(_.getString(0)).toSeq)
-      .select("mention").distinct()
+    val (mentions, m2e) = Mentions.seedMentions(spark,
+      KgPipeline.textSpans(CorpusData.docsDF(spark, cfg)), dict)
     // the BFS expansion is consumed by several downstream actions (labels,
     // alias edges, the caller's counts) — materialize it once
     val kb = KbExpand.expand(spark, mentions, dict,
-      CorpusData.avpairDF(spark, cfg), rules.recursive).localCheckpoint()
+      CorpusData.avpairDF(spark, cfg), rules.recursive,
+      m2eTooLarge = m2e.isEmpty).localCheckpoint()
     val labels = Canon.nodeLabels(kb, Rules.categoryPred, rules.labelCol)
       .localCheckpoint()
     val canon = Canon.canonicalMap(kb, Rules.categoryPred, Rules.aliasPreds,

@@ -978,11 +978,11 @@ object SparkEntry {
     }),
     "q_kg_canon_map" -> ((s, _) => {
       val dict = CorpusData.ment2entDF(s, kgCfg)
-      val mentions = Mentions.detect(s, KgPipeline.textSpans(CorpusData.docsDF(s, kgCfg)),
-        dict.select("mention").distinct().collect().map(_.getString(0)).toSeq)
-        .select("mention").distinct()
+      val (mentions, m2e) = Mentions.seedMentions(s,
+        KgPipeline.textSpans(CorpusData.docsDF(s, kgCfg)), dict)
       val kb = KbExpand.expand(s, mentions, dict,
-        CorpusData.avpairDF(s, kgCfg), Rules.recursivePreds)
+        CorpusData.avpairDF(s, kgCfg), Rules.recursivePreds,
+        m2eTooLarge = m2e.isEmpty)
       Canon.canonicalMap(kb, Rules.categoryPred, Rules.aliasPreds)
     }),
     "q_tree_depth_histogram" -> ((s, _) =>

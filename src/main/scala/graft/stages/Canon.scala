@@ -94,14 +94,6 @@ object Canon {
       .distinct()
   }
 
-  /** Iterative min-label propagation connected components over undirected
-    * edges — the north-star CC kernel (SURVEY.md §2.6 G5). Hot components
-    * (celebrity roots / hub aliases) are handled with an explicit two-phase
-    * salted min-aggregate; lineage is truncated with localCheckpoint every
-    * `checkpointEvery` rounds.
-    *
-    * @return (name, comp) where comp = lexicographically-min name reachable.
-    */
   /** Last iterative-kernel round count — a test/diagnostic seam written by
     * [[connectedComponents]] and [[ccLogRounds]] (0 after a driver fast
     * path). */
@@ -139,6 +131,14 @@ object Canon {
     Some(nodes.iterator.map(n => (n, find(n))).toSeq.toDF("name", "comp"))
   }
 
+  /** Iterative min-label propagation connected components over undirected
+    * edges — the north-star CC kernel (SURVEY.md §2.6 G5). Hot components
+    * (celebrity roots / hub aliases) are handled with an explicit two-phase
+    * salted min-aggregate; lineage is truncated with localCheckpoint every
+    * `checkpointEvery` rounds.
+    *
+    * @return (name, comp) where comp = lexicographically-min name reachable.
+    */
   def connectedComponents(edges: DataFrame, salt: Int = 16,
                           checkpointEvery: Int = 3,
                           driverThreshold: Long = 0L): DataFrame = {
@@ -296,12 +296,11 @@ object Canon {
 
   /** The driver image of the canonical-map dataflow over an already-local
     * KB triple set — labels, containment+alias union-find, non-identity
-    * pairs. Shared by [[canonicalMap]]'s fast path and KgPipeline's fused
-    * dim phase. Returns None when the name set exceeds the quadratic
-    * containment loop's sane bound (callers fall back to the bigram-blocked
-    * dataflow). Semantics identical to the dataflow path — parity-tested in
-    * KgParitySpec. */
-  private[graft] def canonicalMapLocal(
+    * pairs: [[canonicalMap]]'s fast path. Returns None when the name set
+    * exceeds the quadratic containment loop's sane bound (the caller falls
+    * back to the bigram-blocked dataflow). Semantics identical to the
+    * dataflow path — parity-tested in KgParitySpec. */
+  private def canonicalMapLocal(
       rows: Iterable[(String, String, String)], categoryPred: String,
       aliasPreds: Set[String]): Option[Seq[(String, String)]] = {
     val labelMap = scala.collection.mutable.HashMap[String, scala.collection.mutable.Set[String]]()

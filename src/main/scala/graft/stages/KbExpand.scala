@@ -24,10 +24,10 @@ import org.apache.spark.sql.functions._
 object KbExpand {
 
   /** The driver BFS walk of the dimension-bounded KB closure — exactly the
-    * reference's HashMap recursion (AbstractSubjectGraph.kt:17–46), shared
-    * by [[expand]]'s fast path and KgPipeline's fused dim phase.
+    * reference's HashMap recursion (AbstractSubjectGraph.kt:17–46), run by
+    * [[expand]]'s fast path.
     * @return visited entities, sorted (deterministic). */
-  private[graft] def expandLocal(
+  private def expandLocal(
       seedMentions: Iterable[String],
       m2e: Map[String, Seq[String]],
       av: Map[String, Array[(String, String, String)]],
@@ -51,7 +51,7 @@ object KbExpand {
 
   /** Distinct (subj, pred, obj) triples of the visited entities — the local
     * image of `visited ⋈ avpair` (avpair complete by the threshold check). */
-  private[graft] def triplesLocal(
+  private def triplesLocal(
       visited: Seq[String],
       av: Map[String, Array[(String, String, String)]]): Seq[(String, String, String)] =
     visited.iterator.flatMap(e => av.getOrElse(e, Array.empty)).toVector.distinct
@@ -62,6 +62,10 @@ object KbExpand {
     * @param recursivePreds relations whose obj re-enters the frontier
     * @param maxRounds safety bound (reference recursion is visited-bounded;
     *                  our KB alias chains converge in ≪ 20 rounds)
+    * @param driverThreshold driver fast-path bound on each dim (0: dataflow only)
+    * @param m2eCollected the ment2ent dimension, already collected by the caller
+    * @param m2eTooLarge  the caller found ment2ent over the bound: dataflow,
+    *                  with no driver collect of either dim
     * @return kb triples (subj, pred, obj) distinct
     */
   def expand(
@@ -85,7 +89,9 @@ object KbExpand {
     // collect itself (limit N+1, check the length) — one driver job, not a
     // count() followed by a collect(); callers that already hold the
     // ment2ent dimension pass it via `m2eCollected` to skip that job too.
-    val avLimited = if (driverThreshold > 0)
+    // A caller that found ment2ent over the bound (`m2eTooLarge`) has ruled
+    // the fast path out already: avpair is then never collected.
+    val avLimited = if (driverThreshold > 0 && !m2eTooLarge)
       avpair.select("entity", "pred", "obj")
         .limit(math.min(driverThreshold, Int.MaxValue - 2L).toInt + 1).collect()
     else Array.empty[org.apache.spark.sql.Row]

@@ -127,4 +127,28 @@ object Mentions {
       .distinct()
       .select(col("doc_id"), col("span_offset"), col("mention"))
   }
+
+  /** The bounded seed step of the KB crawl: the distinct dictionary
+    * mentions in `textSpans`. ONE limit-N+1 collect of the `ment2ent`
+    * dimension probes `bound`: within it the collected dictionary builds the
+    * broadcast trie ([[detect]]); over it detection runs distributed
+    * ([[detectBySubstring]]) and the dictionary never reaches the driver.
+    * @return (single-column DF `mention`, distinct; the mention → entities
+    *   dictionary when it fit — hand it to KbExpand.expand as
+    *   `m2eCollected`, and `m2eTooLarge = dict.isEmpty`) */
+  def seedMentions(spark: SparkSession, textSpans: DataFrame, ment2ent: DataFrame,
+                   bound: Long = 2000000L)
+      : (DataFrame, Option[Map[String, Seq[String]]]) = {
+    import spark.implicits._
+    val rows = ment2ent.select(col("mention"), col("entities"))
+      .limit(math.min(bound, Int.MaxValue - 2L).toInt + 1)
+      .as[(String, Seq[String])].collect()
+    val (found, dict) =
+      if (rows.length > bound)
+        (detectBySubstring(spark, textSpans, ment2ent.select("mention")), None)
+      else
+        (detect(spark, textSpans, rows.iterator.map(_._1).toSeq.distinct),
+          Some(rows.toMap))
+    (found.select(col("mention")).distinct(), dict)
+  }
 }

@@ -30,12 +30,11 @@ object StreamingKg {
   def batchTriples(spark: SparkSession, batch: DataFrame,
                    ment2ent: DataFrame, avpair: DataFrame): DataFrame = {
     val weibo = WeiboTriples.emit(Normalize.blogs(batch), Normalize.comments(batch))
-    val dict = ment2ent.select("mention").distinct()
-      .collect().map(_.getString(0)).toSeq
-    val mentions = Mentions.detect(spark, KgPipeline.textSpans(batch), dict)
-      .select(col("mention")).distinct()
+    val (mentions, dict) =
+      Mentions.seedMentions(spark, KgPipeline.textSpans(batch), ment2ent)
     val kb = KbExpand.expand(spark, mentions, ment2ent, avpair,
-      Rules.recursivePreds, driverThreshold = 2000000L)
+      Rules.recursivePreds, driverThreshold = 2000000L,
+      m2eCollected = dict, m2eTooLarge = dict.isEmpty)
     weibo.unionByName(kb.select(col("subj"), col("pred"), col("obj"),
         lit(null).cast("string").as("doc_id"), lit(-1).as("span_offset")))
       .groupBy("subj", "pred", "obj")
