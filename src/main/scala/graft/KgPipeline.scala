@@ -2,7 +2,7 @@ package graft
 
 import graft.core.{Rules, TableIO}
 import graft.stages._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SharedRows
@@ -17,7 +17,9 @@ import org.apache.spark.sql.graftbridge.SharedRows
   *
   * Each stage optionally checkpoints through [[TableIO]] (Iceberg-style
   * snapshot + lineage manifest); a killed run resumes from the last committed
-  * snapshot, skipping finished stages entirely.
+  * snapshot, skipping finished stages entirely. Checkpointed, independent
+  * stages commit side by side: weibo_triples beside kb_triples → canon_map,
+  * and vertices beside edges.
   */
 object KgPipeline {
 
@@ -33,12 +35,15 @@ object KgPipeline {
     * vertices and edges derived from it.
     *
     * With `io` every stage is snapshot-committed and the outputs read the
-    * committed tables. Without it the returned `triples` is already
-    * materialized: its plan (normalize → emit → canonicalize → dedup) runs
-    * once, the dedup's map stage inside this call, and `vertices`, `edges`
-    * and `triples` all read the same shared rows. Those blocks live until
-    * the outputs are unreachable, then the ContextCleaner reaps them; a
-    * lost block is recomputed from lineage.
+    * committed tables; weibo_triples commits on one thread while
+    * kb_triples and canon_map commit on another, and so do vertices and
+    * edges (see [[both]]). The weibo stage's quarantine counters are
+    * observed by its write. Without it evaluation is sequential, and the
+    * returned `triples` is already materialized: its plan (normalize →
+    * emit → canonicalize → dedup) runs once, the dedup's map stage inside
+    * this call, and `vertices`, `edges` and `triples` all read the same
+    * shared rows. Those blocks live until the outputs are unreachable, then
+    * the ContextCleaner reaps them; a lost block is recomputed from lineage.
     *
     * @param dimFastPaths when true, the dimension-bounded passes (KB BFS
     *   closure, alias CC) use their driver fast paths within `dimBound`
@@ -87,51 +92,60 @@ object KgPipeline {
         case Some(t) => t.runOrResume(name, upstream, counters)(f)
         case None => f
       }
+    def both[A, B](a: => A, b: => B): (A, B) =
+      KgPipeline.both(a, b, parallel = io.isDefined)
     def small(df: DataFrame): DataFrame =
       if (io.isDefined || df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) df
       else df.localCheckpoint()
 
     // quarantine metrics — the dataflow image of the reference's println
     // dead-letter paths (FromScrappyDump.kt:166, 179–182, 228–232, 296–299):
-    // counted per stage into the lineage manifest instead of logged
-    def weiboCounters: Map[String, Long] = {
-      val b = Normalize.blogs(docs).agg(
-        sum(when(!col("valid"), 1L).otherwise(0L)).as("invalid"),
-        sum(when(col("valid") && !col("time_ok"), 1L).otherwise(0L)).as("bad_time")
-      ).collect()(0)
-      val c = Normalize.comments(docs).agg(
-        sum(when(!col("valid"), 1L).otherwise(0L)).as("invalid")).collect()(0)
-      Map(
-        "blogs_skipped" -> Option(b.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L),
-        "blogs_bad_time" -> Option(b.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L),
-        "comments_skipped" -> Option(c.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L))
-    }
-
-    val weibo = stage("weibo_triples", Seq.empty, weiboCounters) {
-      WeiboTriples.emit(Normalize.blogs(docs), Normalize.comments(docs))
+    // counted per stage into the lineage manifest instead of logged. With
+    // io they are observed on the normalized rows below emit's `valid`
+    // filter, in the weibo_triples write itself, and read after it; the
+    // lazy plan carries no observation (its counters are never read).
+    val blogsObs, commentsObs = Observation()
+    val invalid = sum(when(!col("valid"), 1L).otherwise(0L)).as("invalid")
+    def observed(df: DataFrame, obs: Observation, aggs: Column*): DataFrame =
+      if (io.isDefined) df.observe(obs, invalid, aggs: _*) else df
+    def observedCount(obs: Observation, name: String): Long =
+      Option(obs.get(name)).map(_.asInstanceOf[Long]).getOrElse(0L)
+    def weiboCounters: Map[String, Long] = Map(
+      "blogs_skipped" -> observedCount(blogsObs, "invalid"),
+      "blogs_bad_time" -> observedCount(blogsObs, "bad_time"),
+      "comments_skipped" -> observedCount(commentsObs, "invalid"))
+    def weiboStage = stage("weibo_triples", Seq.empty, weiboCounters) {
+      WeiboTriples.emit(
+        observed(Normalize.blogs(docs), blogsObs,
+          sum(when(col("valid") && !col("time_ok"), 1L).otherwise(0L)).as("bad_time")),
+        observed(Normalize.comments(docs), commentsObs))
     }
 
     // Dim phase, one body for both modes: the seed step's one bounded
     // ment2ent collect feeds the trie and (via m2eCollected) the closure's
     // fast path; an over-bound dictionary routes through the distributed
     // substring detect and the dataflow BFS. The fast paths' outputs are
-    // LocalRelations, which `small()` leaves as they are.
-    val kb = small(stage("kb_triples", Seq.empty) {
-      val (mentions, dict) =
-        Mentions.seedMentions(spark, textSpans(docs), ment2ent, dimBound)
-      KbExpand.expand(spark, mentions, ment2ent, avpair, Rules.recursivePreds,
-        driverThreshold = dimThreshold, m2eCollected = dict,
-        m2eTooLarge = dict.isEmpty)
-    })
+    // LocalRelations, which `small()` leaves as they are. The CC pass runs
+    // once and is snapshot-committed: resume never re-iterates.
+    def dimStages: (DataFrame, DataFrame) = {
+      val kb = small(stage("kb_triples", Seq.empty) {
+        val (mentions, dict) =
+          Mentions.seedMentions(spark, textSpans(docs), ment2ent, dimBound)
+        KbExpand.expand(spark, mentions, ment2ent, avpair, Rules.recursivePreds,
+          driverThreshold = dimThreshold, m2eCollected = dict,
+          m2eTooLarge = dict.isEmpty)
+      })
+      (kb, small(stage("canon_map", Seq("kb_triples")) {
+        Canon.canonicalMap(kb, Rules.categoryPred, Rules.aliasPreds,
+          ccDriverThreshold = dimThreshold)
+      }))
+    }
+
+    // weibo_triples does not depend on kb_triples → canon_map
+    val (weibo, (kb, canonMap)) = both(weiboStage, dimStages)
 
     val kbT = kb.select(col("subj"), col("pred"), col("obj"),
       lit(null).cast("string").as("doc_id"), lit(-1).as("span_offset"))
-
-    // the CC pass runs once and is snapshot-committed: resume never re-iterates
-    val canonMap = small(stage("canon_map", Seq("kb_triples")) {
-      Canon.canonicalMap(kb, Rules.categoryPred, Rules.aliasPreds,
-        ccDriverThreshold = dimThreshold)
-    })
 
     val deduped = stage("triples", Seq("weibo_triples", "kb_triples", "canon_map")) {
       val all = Canon.canonicalize(weibo.unionByName(kbT), canonMap)
@@ -152,12 +166,41 @@ object KgPipeline {
     val labels = Canon.nodeLabels(
       Canon.canonicalize(kbT, canonMap), Rules.categoryPred)
 
-    val vertices = stage("vertices", Seq("triples")) {
-      GraphOut.vertices(triples, labels, shufflePartitions)
-    }
-    val edges = stage("edges", Seq("triples")) {
-      GraphOut.edges(triples, shufflePartitions)
-    }
+    // vertices and edges read only the triples
+    val (vertices, edges) = both(
+      stage("vertices", Seq("triples")) {
+        GraphOut.vertices(triples, labels, shufflePartitions)
+      },
+      stage("edges", Seq("triples")) {
+        GraphOut.edges(triples, shufflePartitions)
+      })
     Outputs(triples, vertices, edges)
   }
+
+  /** Evaluates two independent branches. With `parallel` they run side by
+    * side: `b` on a new thread while `a` runs on the caller's, so each
+    * branch's driver-side planning overlaps the other's running jobs. A new
+    * thread inherits the SparkContext's local properties (job tags,
+    * scheduler pool, a tracer's span) and the active session. The branch
+    * thread is always joined before an error is rethrown, `a`'s first.
+    * Without `parallel`, `a` then `b` on the caller's thread. */
+  private def both[A, B](a: => A, b: => B, parallel: Boolean): (A, B) =
+    if (!parallel) (a, b)
+    else {
+      var rb: Either[Throwable, B] = null
+      val t = new Thread(() =>
+        rb = try Right(b) catch { case e: Throwable => Left(e) }, BranchThread)
+      t.setDaemon(true)
+      t.start()
+      val ra = try Right(a) catch { case e: Throwable => Left(e) }
+      t.join()
+      (ra, rb) match {
+        case (Left(e), _) => throw e
+        case (_, Left(e)) => throw e
+        case (Right(x), Right(y)) => (x, y)
+      }
+    }
+
+  /** Name of the thread that runs a checkpointed run's second branch. */
+  private[graft] val BranchThread = "graft-kg-branch"
 }

@@ -145,6 +145,57 @@ class KgParitySpec extends AnyFunSuite {
     assert(manifest.contains("\"row_count\""))
   }
 
+  test("weibo_triples manifest: quarantine counters equal counts over the normalized rows") {
+    val io = new TableIO(spark, Files.createTempDirectory("kgio").toString)
+    KgPipeline.run(spark, docs, m2e, av, Some(io), 4)
+    val blogs = graft.stages.Normalize.blogs(docs)
+    val comments = graft.stages.Normalize.comments(docs)
+    val expected = Map(
+      "blogs_skipped" -> blogs.filter(!col("valid")).count(),
+      "blogs_bad_time" -> blogs.filter(col("valid") && !col("time_ok")).count(),
+      "comments_skipped" -> comments.filter(!col("valid")).count())
+    assert(expected("blogs_skipped") === 16L, "fixture: 16 blogs without a mid or time")
+    for ((name, n) <- expected)
+      assert(io.counterOf("weibo_triples", name) === Some(n), name)
+  }
+
+  test("a failed overlapped commit: branches joined, nothing half-published, clean resume") {
+    import scala.jdk.CollectionConverters._
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val root = Files.createTempDirectory("kgio-fail")
+    // a regular file where the vertices table belongs: its commit fails
+    // while edges commits on the other branch
+    val blocker = root.resolve("vertices")
+    Files.writeString(blocker, "not a table")
+    intercept[java.nio.file.NotDirectoryException] {
+      KgPipeline.run(spark, docs, m2e, av, Some(new TableIO(spark, root.toString)), 4)
+    }
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName == KgPipeline.BranchThread && t.isAlive),
+      "a pipeline branch thread outlived the failed run")
+    // every published snapshot is complete: manifest present, rows as stated
+    val io = new TableIO(spark, root.toString)
+    for (st <- Seq("weibo_triples", "kb_triples", "canon_map", "triples", "edges")) {
+      val snaps = Files.list(root.resolve(st)).iterator.asScala
+        .filter(_.getFileName.toString.startsWith("snapshot-")).toSeq
+      assert(snaps.size == 1 && Files.exists(snaps.head.resolve("_manifest.json")),
+        s"$st: $snaps")
+      assert(io.counterOf(st, "row_count") === Some(io.read(st).count()), st)
+    }
+
+    Files.delete(blocker)
+    val resumed = KgPipeline.run(spark, docs, m2e, av, Some(io), 4)
+    val clean = KgPipeline.run(spark, docs, m2e, av,
+      Some(new TableIO(spark, Files.createTempDirectory("kgio-clean").toString)), 4)
+    for ((name, r, c) <- Seq(("triples", resumed.triples, clean.triples),
+        ("vertices", resumed.vertices, clean.vertices), ("edges", resumed.edges, clean.edges))) {
+      val (a, b) = (rows(r), rows(c))
+      assert(a.nonEmpty && a == b, s"$name: resumedOnly=${(a diff b).take(3)} cleanOnly=${(b diff a).take(3)}")
+    }
+    // only vertices was committed by the re-run
+    assert(Seq("triples", "edges", "vertices").map(io.lastCommitted) === Seq(0, 0, 0))
+  }
+
   test("lazy ≡ checkpointed: identical triples (with provenance), vertices and edges") {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
     for (fast <- Seq(false, true)) {
