@@ -45,6 +45,10 @@ object KgPipeline {
     * shared rows. Those blocks live until the outputs are unreachable, then
     * the ContextCleaner reaps them; a lost block is recomputed from lineage.
     *
+    * @param shufflePartitions kept for source compatibility with existing
+    *   callers only: it sets no exchange width. Every exchange, the
+    *   vertices/edges dedup included, starts at the session's
+    *   `spark.sql.shuffle.partitions` and AQE coalesces it.
     * @param dimFastPaths when true, the dimension-bounded passes (KB BFS
     *   closure, alias CC) use their driver fast paths within `dimBound`
     *   (see KbExpand/Canon docs), with or without `io`. The golden P/R

@@ -39,7 +39,7 @@ object PipelineMain {
     val t0 = System.nanoTime()
     KgPipeline.run(spark, CorpusData.docsDF(spark, cfg),
       CorpusData.ment2entDF(spark, cfg), CorpusData.avpairDF(spark, cfg),
-      io = Some(io), shufflePartitions = shuffleParts, dimFastPaths = true)
+      io = Some(io), dimFastPaths = true)
     // every output is committed by now; its manifest holds the row count
     def rows(stage: String): Long = io.counterOf(stage, "row_count").get
     val (nTriples, nV, nE) = (rows("triples"), rows("vertices"), rows("edges"))

@@ -31,8 +31,7 @@ object SparkEntry {
   private def kgOutputs(s: SparkSession): KgPipeline.Outputs = synchronized {
     if (kgCache == null || (kgCache._1 ne s)) {
       val out = KgPipeline.run(s, CorpusData.docsDF(s, kgCfg),
-        CorpusData.ment2entDF(s, kgCfg), CorpusData.avpairDF(s, kgCfg),
-        shufflePartitions = s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        CorpusData.ment2entDF(s, kgCfg), CorpusData.avpairDF(s, kgCfg))
       // run's lazy-mode triples are already materialized once
       kgCache = (s, out.copy(vertices = out.vertices.localCheckpoint(),
         edges = out.edges.localCheckpoint()))

@@ -5,9 +5,11 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 /** Iceberg-style snapshot table layer: atomic-commit Parquet snapshots with
   * per-file lineage manifests and resume (SURVEY.md §7.3).
@@ -86,7 +88,7 @@ final class TableIO(spark: SparkSession, root: String) {
   /** Snapshot directories read with their manifests' schema when they all
     * store the same one; otherwise Spark infers it (a Spark job). */
   private def load(dirs: Seq[Path]): DataFrame = {
-    val paths = dirs.map(_.toString)
+    val paths = dirs.map(d => literalGlob(d.toString))
     dirs.map(storedSchema).distinct match {
       case Seq(Some(schema)) => spark.read.schema(schema).parquet(paths: _*)
       case _ => spark.read.parquet(paths: _*)
@@ -113,7 +115,14 @@ final class TableIO(spark: SparkSession, root: String) {
     val k = lastCommitted(stage) + 1
     val dir = snapDir(stage, k)
     val tmp = stageDir(stage).resolve(s".tmp-snapshot-$k")
-    df.write.mode("overwrite").parquet(tmp.toString)
+    // a driver-built frame (a LocalRelation: a dim fast path's output) is
+    // small by construction; uncoalesced it writes one file per
+    // default-parallelism slot, and a bounded limit-N+1 read of the
+    // snapshot (Canon.canonicalMap over kb_triples) then takes two jobs
+    val out =
+      if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) df.coalesce(1)
+      else df
+    out.write.mode("overwrite").parquet(tmp.toString)
 
     val files = writtenFiles(tmp)
     val m = Json.createObjectNode()
@@ -180,6 +189,14 @@ object TableIO {
   /** `part-<task partition>-<uuid>…`: the write task's partition id. */
   private val PartId = """^part-(\d+)""".r
   private val Json = new ObjectMapper()
+  private val GlobChar = """[\\\[\]{}*?]""".r
+
+  /** `path` as a Hadoop glob that matches only itself. Spark's readers
+    * expand every path as a glob, and a stage name (a directory) may hold
+    * `\`, `[`, `{`, `*` or `?`. (Spark's internal no-glob read option lists
+    * every path once per path when several are read together.) */
+  private def literalGlob(path: String): String =
+    GlobChar.replaceAllIn(path, m => Regex.quoteReplacement("\\" + m.matched))
 
   private final case class DataFile(name: String, pid: Int, rows: Long,
                                     schema: Option[StructType])

@@ -13,9 +13,17 @@ import org.apache.spark.sql.functions._
   * Ids are stable `xxhash64(name)` — no transactional counter (SURVEY.md
   * §7.4); contiguous ids exist only in the small export path (window
   * row_number over the export set, DumpGraphToText.kt:93–108 image).
-  * Dedup is the north-star two-phase hash aggregate: Catalyst already plans
-  * partial-per-partition + final for dropDuplicates; we repartition on the
-  * dedup key first so the final exchange width is explicit.
+  * Dedup is the north-star two-phase hash aggregate: Catalyst plans
+  * partial-per-partition + final for dropDuplicates, and the exchange
+  * between them is the one the final aggregate requires. Its initial width
+  * is `spark.sql.shuffle.partitions`, which AQE coalesces to the data it
+  * sees (one task on a small graph, the cluster's parallelism or more at
+  * lake scale). A fixed-count `repartition` here would be an exchange AQE
+  * never coalesces: one task and one output file per partition, whatever
+  * the data size.
+  *
+  * `vertices`/`edges` keep their `parts` parameter for source compatibility
+  * with existing callers only: it no longer sets a width.
   */
 object GraphOut {
 
@@ -25,7 +33,6 @@ object GraphOut {
   def vertices(triples: DataFrame, labelsByName: DataFrame, parts: Int): DataFrame = {
     val names = triples.select(col("subj").as("name"))
       .unionByName(triples.select(col("obj").as("name")))
-      .repartition(parts, col("name"))
       .dropDuplicates("name")
     names.join(labelsByName, Seq("name"), "left")
       .select(xxhash64(col("name")).as("vertex_id"), col("name"),
@@ -36,7 +43,6 @@ object GraphOut {
     triples
       .select(xxhash64(col("subj")).as("src"), xxhash64(col("obj")).as("dst"),
         col("pred").as("rel"))
-      .repartition(parts, col("src"), col("dst"), col("rel"))
       .dropDuplicates("src", "dst", "rel")
 
   /** Small-export path: contiguous integer ids in deterministic order

@@ -243,6 +243,72 @@ class KgParitySpec extends AnyFunSuite {
     }
   }
 
+  test("vertices/edges: AQE sizes the dedup exchange, no fixed-count repartition") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    def assertAqeSized(what: String, plan: SparkPlan): Unit = {
+      val origins = Plans.collect(plan) { case e: ShuffleExchangeExec => e.shuffleOrigin }
+      assert(origins.nonEmpty, s"$what: no exchange in\n$plan")
+      assert(!origins.contains(REPARTITION_BY_NUM), s"$what: fixed-count repartition in\n$plan")
+    }
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+    val lz = KgPipeline.run(spark, docs, m2e, av, shufflePartitions = width,
+      dimFastPaths = true)
+    for ((name, df) <- Seq(("vertices", lz.vertices), ("edges", lz.edges))) {
+      df.collect() // runs df's own QueryExecution, so its executed plan is final
+      assertAqeSized(s"lazy $name", df.queryExecution.executedPlan)
+    }
+
+    // checkpointed: the plans that wrote each stage's snapshot
+    val writes = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]()
+    val qel = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        Plans.collect(qe.executedPlan) {
+          case w @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
+            writes.put(c.outputPath.getParent.getName, w)
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // query-execution listeners share the listener bus queue with
+    // SparkListeners: once the sentinel job's start is seen, every earlier
+    // write has been reported
+    val sentinel = spark.sparkContext.parallelize(Seq(1), 1)
+    val sentinelSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val sl = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.stageInfos.exists(_.rddInfos.exists(_.id == sentinel.id))) sentinelSeen.set(true)
+    }
+    val root = Files.createTempDirectory("kgio-aqe")
+    val io = new TableIO(spark, root.toString)
+    spark.listenerManager.register(qel)
+    spark.sparkContext.addSparkListener(sl)
+    try {
+      KgPipeline.run(spark, docs, m2e, av, Some(io), width, dimFastPaths = true)
+      sentinel.count()
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!sentinelSeen.get && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sentinelSeen.get, "listener never saw the sentinel job")
+    } finally {
+      spark.listenerManager.unregister(qel)
+      spark.sparkContext.removeSparkListener(sl)
+    }
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (name <- Seq("vertices", "edges")) {
+      assert(writes.containsKey(name), s"no write of $name seen: ${writes.keySet}")
+      assertAqeSized(s"checkpointed $name", writes.get(name))
+      val files = json.readTree(io.manifest(name)).get("per_partition").size
+      assert(files >= 1 && files < width,
+        s"checkpointed $name: $files files at spark.sql.shuffle.partitions = $width")
+    }
+  }
+
   test("dedup + canonicalization idempotence: running twice = once") {
     val out1 = KgPipeline.run(spark, docs, m2e, av, shufflePartitions = 4)
     val t1 = out1.triples.select("subj", "pred", "obj")

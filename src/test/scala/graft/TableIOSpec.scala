@@ -139,9 +139,9 @@ class TableIOSpec extends AnyFunSuite {
   test("manifest: a `snapshot` counter and quoted or escaped names round-trip") {
     val root = tmpDir("tableio-names")
     val io = new TableIO(spark, root.toString)
-    // (a backslash stays out of the stage name: it is the table's directory,
-    // and Hadoop path globbing reads `\` as an escape)
-    val stage = "odd \"stage\" name"
+    // the stage name is the table's directory: every Hadoop glob
+    // metacharacter in it must be read literally
+    val stage = "odd \"stage\" \\ [x] {a,b} * ?"
     val counters = Map("snapshot" -> 7L, "say \"hi\"" -> 11L, "back\\slash" -> 13L,
       "row_count" -> 17L)
     io.commit(stage, spark.range(3).toDF("id"), counters = counters)
@@ -155,6 +155,30 @@ class TableIOSpec extends AnyFunSuite {
     assert(io.counterOf(stage, "row_count") === Some(5L))
     assert(io.counterOf(stage, "stage") === None, "a non-numeric field is no counter")
     assert(io.counterOf(stage, "missing") === None)
+    assert(io.read(stage).count() === 5L)
+    assert(io.readAll(stage).count() === 3L + 5L)
+
+    // a name that, as a glob, would also match its neighbour's directory
+    io.commit("s?", spark.range(2).toDF("id"))
+    io.commit("sa", spark.range(7).toDF("id"))
+    assert(io.read("s?").count() === 2L && io.readAll("s?").count() === 2L)
+    assert(io.counterOf("s?", "row_count") === Some(2L))
+  }
+
+  test("a driver-built frame commits as one file; a distributed one keeps its partitions") {
+    val io = new TableIO(spark, tmpDir("tableio-local").toString)
+    import spark.implicits._
+    val rows = (1 to 50).map(i => (s"s$i", i))
+    val local = rows.toDF("name", "n")
+    assert(local.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(spark.sparkContext.defaultParallelism > 1)
+    io.commit("local", local)
+    io.commit("ranged", spark.range(0, 100, 1, 4).toDF("id"))
+    for ((st, files) <- Seq(("local", 1), ("ranged", 4)))
+      assert(manifestOf(io, st).get("per_partition").size === files, st)
+    assertLineage(io, "local")
+    assert(io.read("local").as[(String, Int)].collect().toSet === rows.toSet)
   }
 
   test("a manifest without a stored schema is read by inference") {
