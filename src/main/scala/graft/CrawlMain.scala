@@ -44,17 +44,7 @@ object CrawlMain {
     val rules = Rules.pipelines.find(_.name == name).getOrElse(
       sys.error(s"unknown pipeline '$name' — one of ${Rules.pipelines.map(_.name).mkString("/")}"))
     val nDocs = if (args.length > 1) args(1).toInt else 1200
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName(s"graft-crawl-$name")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = PipelineMain.submitSession(s"graft-crawl-$name")
     val (kb, labels, canon) = run(spark,
       rules, Corpus.Config(nDocs = nDocs, nEntities = 120, seed = 42L))
     val nKb = kb.count()

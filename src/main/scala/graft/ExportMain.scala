@@ -2,7 +2,6 @@ package graft
 
 import graft.gen.{Corpus, CorpusData}
 import graft.stages.{Export, Normalize, TreeAnalytics}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** spark-submit entry point mirroring the reference's DumpGraphToText main:
@@ -17,20 +16,7 @@ object ExportMain {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft-export")
     val nDocs = if (args.length > 1) args(1).toInt else 10000
-    val master = if (args.length > 2) args(2) else
-      sys.env.getOrElse("SPARK_MASTER", "local[8]")
-
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-export")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = PipelineMain.submitSession("graft-export", args.lift(2))
 
     val cfg = Corpus.Config(nDocs = nDocs)
     val docs = CorpusData.docsDF(spark, cfg)

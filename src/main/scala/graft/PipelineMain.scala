@@ -16,23 +16,32 @@ import org.apache.spark.sql.SparkSession
   * counters; the printed counts are read from them).
   */
 object PipelineMain {
-  def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("/tmp/graft-kg-out")
-    val nDocs = if (args.length > 1) args(1).toInt else 10000
-    val master = if (args.length > 2) args(2) else
-      sys.env.getOrElse("SPARK_MASTER", "local[8]")
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt
 
+  /** The session every spark-submit main (this one, ExportMain,
+    * TreeGraphMain, CrawlMain) runs in: master `SPARK_MASTER` (default
+    * local[8]) unless the command line names one, `SPARK_GRAFT_SHUFFLE`
+    * shuffle partitions (default 32), AQE with skew join, UTC, no UI, WARN
+    * logging. */
+  private[graft] def submitSession(appName: String,
+                                   master: Option[String] = None): SparkSession = {
     val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-kg-pipeline")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
+      .master(master.getOrElse(sys.env.getOrElse("SPARK_MASTER", "local[8]")))
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val outDir = args.headOption.getOrElse("/tmp/graft-kg-out")
+    val nDocs = if (args.length > 1) args(1).toInt else 10000
+    val spark = submitSession("graft-kg-pipeline", args.lift(2))
 
     val cfg = Corpus.Config(nDocs = nDocs)
     val io = new TableIO(spark, outDir)

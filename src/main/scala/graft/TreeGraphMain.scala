@@ -2,7 +2,6 @@ package graft
 
 import graft.gen.{Corpus, CorpusData}
 import graft.stages.{Normalize, TreeGraph}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** spark-submit entry point mirroring the reference's BlogTreeInNeo4j main
@@ -21,20 +20,7 @@ object TreeGraphMain {
       if (args.length > 1) args(1).split(",").toSeq
       else Seq(Corpus.codedMid(0, 0))
     val nDocs = if (args.length > 2) args(2).toInt else 10000
-    val master = if (args.length > 3) args(3) else
-      sys.env.getOrElse("SPARK_MASTER", "local[8]")
-
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-tree-graph")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = PipelineMain.submitSession("graft-tree-graph", args.lift(3))
 
     val docs = CorpusData.docsDF(spark, Corpus.Config(nDocs = nDocs))
     val edges = TreeGraph.edges(

@@ -15,13 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Deterministic pseudo-random hyperplane component for (plane p, dim d):
-    * maps md5 to ±1. (Kept for the HOF parity test — the engine path is the
-    * native [[graft.functions.SignBucket]] expression.) */
-  private def planeSign(p: Int, d: Column): Column =
-    when(conv(substring(md5(concat(lit(p.toString), lit("_"), d.cast("string"))),
-      1, 6), 16, 10).cast("long") % 2 === 0, 1.0).otherwise(-1.0)
-
   /** Random-hyperplane sign bucket: `planes` sign bits of the vector's dot
     * products with deterministic ±1 hyperplanes. Native codegen'd
     * expression — one fused primitive loop per row over a sign table
@@ -29,20 +22,6 @@ object Similarity {
     * planes × dims md5 signs per corpus row). */
   def signBucket(v: Column, planes: Int): Column =
     graft.functions.SignBucket(v, planes)
-
-  /** The original higher-order-function formulation, bit-identical by
-    * construction — retained ONLY as the parity oracle for the native
-    * expression (DatapipeSpec). */
-  private[graft] def signBucketHof(v: Column, planes: Int): Column = {
-    val bits = (0 until planes).map { p =>
-      val dot = aggregate(
-        zip_with(v, sequence(lit(0), size(v) - 1),
-          (x, i) => x * planeSign(p, i)),
-        lit(0.0), (acc, x) => acc + x)
-      when(dot >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** Brute-force cosine top-k: for each query vector, the k nearest corpus
     * vectors (excluding self). Query set is broadcast; ties broken by id. */
@@ -101,7 +80,8 @@ object Similarity {
     * PROJECTION: zero corpus-side Exchange, vs the previous cross-join +
     * two-phase `max_by` aggregate whose final exchange still carried one
     * (id, v, cid, csim) struct per corpus vector. Tie-break identical:
-    * max rounded cosine (nan-safe ordering), then MIN cid. */
+    * max rounded cosine (nan-safe ordering), then MIN cid. Rows with a null
+    * vector get no cell and are dropped. */
   def assignCells(corpus: DataFrame, cent: DataFrame): DataFrame =
     assignCellsLocal(corpus, centRowsOf(cent))
 
@@ -179,14 +159,17 @@ object Similarity {
   }
 
   /** Bounded SPHERICAL k-means over the embedding corpus — the centroid
-    * TRAINING pass that slots into [[ivfTopK]]'s `centroids` seam. Same
-    * kernel discipline as Canon.connectedComponents: broadcast the (small)
-    * centroid dim each iteration, assign with the two-phase argmax, refit
-    * with two-phase per-dimension mean aggregates (posexplode → avg —
-    * map-side combined, one narrow shuffle on (cid, pos)), and truncate
-    * lineage per iteration with localCheckpoint. Deterministic seeding (the
-    * k smallest ids); a cell that loses all members keeps its previous
-    * centroid. Returns (cid, cv).
+    * TRAINING pass that slots into [[ivfTopK]]'s `centroids` seam. The
+    * centroids stay on the driver: each iteration assigns with one
+    * [[graft.functions.BestCell]] projection over the checkpointed corpus
+    * and refits with one two-phase per-dimension mean aggregate (k rows
+    * collected). Deterministic seeding (the k smallest ids with a non-null
+    * vector); rows with a null vector are dropped. A cell that loses all
+    * members keeps its previous centroid, and a dimension none of a cell's
+    * members has keeps its previous component (ragged vectors: a shorter
+    * vector contributes nothing past its length; 0 where the previous
+    * centroid is shorter too). Centroids have the first seed's length.
+    * Returns (cid, cv).
     *
     * Two guarantees back the `trained_qe ≤ seed_qe` gate row:
     *  1. members are NORMALIZED before the mean update (spherical
@@ -216,6 +199,7 @@ object Similarity {
                             k: Int, iters: Int = 5): TrainedIndex = {
     val spark = corpus.sparkSession
     val data = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
+      .filter(col("v").isNotNull)
       .localCheckpoint()
     // seed: the k smallest ids, numbered 0..k-1. Centroids live DRIVER-SIDE
     // for the whole loop — they are k rows by definition (the old
@@ -252,16 +236,21 @@ object Similarity {
       if (dims > 0) {
         // spherical refit: normalize natively, then ONE two-phase hash
         // aggregate (cid → per-dimension means) collected to k tiny rows;
-        // a cell that loses all members keeps its previous centroid
+        // a cell that loses all members keeps its previous centroid, a
+        // null mean (no member reaches that dimension) its previous component
         val avgs = (0 until dims).map(d =>
-          avg(element_at(col("nv"), d + 1)).as(s"m$d"))
+          avg(try_element_at(col("nv"), lit(d + 1))).as(s"m$d"))
         val means = cells
           .select(col("cid"), graft.functions.VecNormalize(col("v")).as("nv"))
           .groupBy("cid").agg(avgs.head, avgs.tail: _*)
           .collect()
-          .map(r => r.getLong(0) ->
-            Array.tabulate(dims)(d => r.getDouble(d + 1))).toMap
-        cur = Array.tabulate(cur.length)(c => means.getOrElse(c.toLong, cur(c)))
+          .map { r =>
+            val c = r.getLong(0).toInt
+            c -> Array.tabulate(dims)(d =>
+              if (r.isNullAt(d + 1)) cur(c).lift(d).getOrElse(0.0)
+              else r.getDouble(d + 1))
+          }.toMap
+        cur = Array.tabulate(cur.length)(c => means.getOrElse(c, cur(c)))
       }
     }
     cents += cur

@@ -94,19 +94,17 @@ object Canon {
       .distinct()
   }
 
-  /** Last iterative-kernel round count — a test/diagnostic seam written by
-    * [[connectedComponents]] and [[ccLogRounds]] (0 after a driver fast
-    * path). */
+  /** Last [[ccLogRounds]] round count — a test/diagnostic seam (0 after the
+    * driver fast path). */
   @volatile private[graft] var lastCcRounds: Int = 0
 
   /** Driver union-find over a symmetric edge frame when it fits under
     * `threshold` — ONE collect job instead of O(rounds) shuffle rounds;
-    * shared by both iterative kernels. The size guard is folded into the
+    * [[ccLogRounds]]' fast path. The size guard is folded into the
     * collect itself (`limit(threshold+1)`, check the length — the
     * KbExpand avpair pattern): a separate count() would cost a second full
     * materialization of the (possibly lazy) edge subtree per call. */
   private def driverCc(sym: DataFrame, threshold: Long): Option[DataFrame] = {
-    if (threshold <= 0) return None
     val spark = sym.sparkSession
     import spark.implicits._
     val pairs = sym
@@ -131,74 +129,10 @@ object Canon {
     Some(nodes.iterator.map(n => (n, find(n))).toSeq.toDF("name", "comp"))
   }
 
-  /** Iterative min-label propagation connected components over undirected
-    * edges — the north-star CC kernel (SURVEY.md §2.6 G5). Hot components
-    * (celebrity roots / hub aliases) are handled with an explicit two-phase
-    * salted min-aggregate; lineage is truncated with localCheckpoint every
-    * `checkpointEvery` rounds.
-    *
-    * @return (name, comp) where comp = lexicographically-min name reachable.
-    */
-  def connectedComponents(edges: DataFrame, salt: Int = 16,
-                          checkpointEvery: Int = 3,
-                          driverThreshold: Long = 0L): DataFrame = {
-    val e = edges.toDF("src", "dst")
-    val sym = e
-      .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
-
-    // The alias graph is KB-bounded (it grows with the dictionary, not the
-    // corpus), so it usually fits the driver: a collected union-find costs
-    // one job instead of O(diameter) shuffle rounds. The iterative kernel
-    // below remains the path for an unbounded alias graph.
-    val fast = driverCc(sym, driverThreshold)
-    if (fast.isDefined) return fast.get
-
-    var comp = sym.select(col("src").as("name")).distinct()
-      .withColumn("comp", col("name"))
-      .localCheckpoint()
-
-    var changed = 1L
-    var iter = 0
-    var prevCached: DataFrame = null
-    while (changed > 0) {
-      // min over neighbors' components; two-phase (salted) aggregate so a
-      // hot node with 10^8 neighbors never lands on one reducer.
-      val nbrMin = sym
-        .join(comp.withColumnRenamed("name", "dst"), Seq("dst"))
-        .groupBy(col("src"), pmod(xxhash64(col("dst")), lit(salt)).as("_salt"))
-        .agg(min(col("comp")).as("c1"))
-        .groupBy(col("src")).agg(min(col("c1")).as("nbr_comp"))
-
-      val next = comp
-        .join(nbrMin.withColumnRenamed("src", "name"), Seq("name"), "left")
-        .select(col("name"), col("comp").as("old_comp"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-
-      val materialized =
-        if ((iter + 1) % checkpointEvery == 0) next.localCheckpoint()
-        else next.cache()
-      changed = materialized.filter(col("comp") =!= col("old_comp")).count()
-      // the previous iteration's cache is superseded the moment the new one
-      // is materialized — unpersist it, or a long CC run accumulates every
-      // iteration in the MemoryStore
-      if (prevCached != null) prevCached.unpersist()
-      prevCached = if ((iter + 1) % checkpointEvery == 0) null else materialized
-      comp = materialized.select("name", "comp")
-      iter += 1
-    }
-    if (prevCached != null) {
-      comp = comp.localCheckpoint() // detach the result from the cache...
-      prevCached.unpersist()        // ...then release the final iteration
-    }
-    lastCcRounds = iter
-    comp
-  }
-
   /** Connected components in O(log n) shuffle rounds — the alternating
     * large-star/small-star kernel (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", 2014). [[connectedComponents]]' min-propagation
-    * pays one full shuffle round PER HOP of component diameter; the
+    * MapReduce and Beyond", 2014). Min-label propagation pays one full
+    * shuffle round PER HOP of component diameter; the
     * corpus-scale dedup pair graph (Dedup.dedupClusters) carries near-dup
     * CHAINS from template drift whose diameter, at 100 TB, would make hop
     * count the wall-clock. Star rounds instead halve the tree height each
@@ -214,8 +148,8 @@ object Canon {
     * signature; lineage is truncated every round (the round count is
     * logarithmic, so checkpoint cost is bounded).
     *
-    * Same contract as [[connectedComponents]] (parity-tested on randomized
-    * graphs in CcHygieneSpec): undirected (src, dst) edges in, (name,
+    * Same contract as min-label propagation (CcHygieneSpec pins it to that
+    * reference kernel on randomized graphs): undirected (src, dst) edges in, (name,
     * comp = lexicographically-smallest reachable name) out, nodes with no
     * edges absent. */
   def ccLogRounds(edges: DataFrame, driverThreshold: Long = 0L,

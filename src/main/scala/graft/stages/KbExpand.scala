@@ -63,7 +63,8 @@ object KbExpand {
     * @param maxRounds safety bound (reference recursion is visited-bounded;
     *                  our KB alias chains converge in ≪ 20 rounds)
     * @param driverThreshold driver fast-path bound on each dim (0: dataflow only)
-    * @param m2eCollected the ment2ent dimension, already collected by the caller
+    * @param m2eCollected the ment2ent dimension, already collected by the
+    *                  caller; the fast path runs only when it is given
     * @param m2eTooLarge  the caller found ment2ent over the bound: dataflow,
     *                  with no driver collect of either dim
     * @return kb triples (subj, pred, obj) distinct
@@ -85,30 +86,18 @@ object KbExpand {
     // which it is broadcast — computing the closure in-memory costs 2 jobs
     // instead of O(rounds); this is exactly the reference's HashMap walk
     // (AbstractSubjectGraph.kt:17–46). The dataflow loop below remains the
-    // path for KBs beyond driver memory. The size guard is folded into the
-    // collect itself (limit N+1, check the length) — one driver job, not a
-    // count() followed by a collect(); callers that already hold the
-    // ment2ent dimension pass it via `m2eCollected` to skip that job too.
-    // A caller that found ment2ent over the bound (`m2eTooLarge`) has ruled
-    // the fast path out already: avpair is then never collected.
-    val avLimited = if (driverThreshold > 0 && !m2eTooLarge)
-      avpair.select("entity", "pred", "obj")
+    // path for KBs beyond driver memory. The fast path needs the ment2ent
+    // dictionary the caller already collected (`m2eCollected`, from
+    // Mentions.seedMentions' limit-N+1 probe); avpair is then collected
+    // under the same guard folded into the collect (limit N+1, check the
+    // length — one driver job, not a count() followed by a collect()). A
+    // caller that found ment2ent over the bound (`m2eTooLarge`) rules the
+    // fast path out: avpair is then never collected.
+    if (driverThreshold > 0 && !m2eTooLarge && m2eCollected.isDefined) {
+      val avLimited = avpair.select("entity", "pred", "obj")
         .limit(math.min(driverThreshold, Int.MaxValue - 2L).toInt + 1).collect()
-    else Array.empty[org.apache.spark.sql.Row]
-    // BOTH dims must fit the driver for the fast path: the m2e collect
-    // carries the same limit-N+1 probe as avpair (an unguarded collect of a
-    // 100× dictionary would OOM the driver instead of degrading)
-    var m2eOver = m2eTooLarge // caller may have already probed the dim
-    if (driverThreshold > 0 && !m2eOver && avLimited.length <= driverThreshold) {
-      import spark.implicits._
-      val m2e = m2eCollected.getOrElse {
-        val rows = ment2ent.select(col("mention"), col("entities"))
-          .limit(math.min(driverThreshold, Int.MaxValue - 2L).toInt + 1)
-          .as[(String, Seq[String])].collect()
-        if (rows.length > driverThreshold) { m2eOver = true; null }
-        else rows.toMap
-      }
-      if (!m2eOver) {
+      if (avLimited.length <= driverThreshold) {
+        import spark.implicits._
         // avLimited holds the COMPLETE avpair table (limit N+1 returned ≤ N)
         val av = avLimited
           .map(r => (r.getString(0), r.getString(1), r.getString(2)))
@@ -117,7 +106,8 @@ object KbExpand {
         // the result is built fully driver-side as a LocalRelation — no
         // join/broadcast/checkpoint jobs; each spared dim-phase job is serial
         // driver latency that lands 1:1 on the small-cluster pipeline wall
-        return triplesLocal(expandLocal(seeds, m2e, av, recursivePreds), av)
+        return triplesLocal(
+          expandLocal(seeds, m2eCollected.get, av, recursivePreds), av)
           .toDF("subj", "pred", "obj")
       }
     }
@@ -125,7 +115,7 @@ object KbExpand {
     // an over-bound dictionary must not be force-broadcast either — let the
     // planner pick the join (AQE broadcasts iff it actually fits)
     val m2eJoin: DataFrame => DataFrame =
-      df => if (m2eOver) df else broadcast(df)
+      df => if (m2eTooLarge) df else broadcast(df)
 
     val recPreds = recursivePreds.toSeq
     var frontier = mentions.select(col("mention")).distinct().localCheckpoint()

@@ -298,13 +298,13 @@ class DatapipeSpec extends AnyFunSuite {
     val c = TextStats.textCounts(col("text"))
     val both = df.select(col("i"), col("text"),
       c.getField("char_count").as("n_char"), length(col("text")).as("h_char"),
-      c.getField("token_count").as("n_tok"), TextStats.tokenCountHof(col("text")).as("h_tok"),
-      c.getField("distinct_tokens").as("n_dis"), TextStats.distinctTokensHof(col("text")).as("h_dis"),
-      c.getField("subword_count").as("n_sub"), TextStats.subwordCountHof(col("text")).as("h_sub"),
-      c.getField("stopword_count").as("n_stop"), TextStats.stopwordCountHof(col("text")).as("h_stop"),
-      c.getField("cjk_count").as("n_cjk"), TextStats.cjkCountHof(col("text")).as("h_cjk"),
-      c.getField("punct_count").as("n_punct"), TextStats.punctCountHof(col("text")).as("h_punct"),
-      c.getField("symbol_count").as("n_sym"), TextStats.symbolCountHof(col("text")).as("h_sym"))
+      c.getField("token_count").as("n_tok"), ParityOracles.tokenCountHof(col("text")).as("h_tok"),
+      c.getField("distinct_tokens").as("n_dis"), ParityOracles.distinctTokensHof(col("text")).as("h_dis"),
+      c.getField("subword_count").as("n_sub"), ParityOracles.subwordCountHof(col("text")).as("h_sub"),
+      c.getField("stopword_count").as("n_stop"), ParityOracles.stopwordCountHof(col("text")).as("h_stop"),
+      c.getField("cjk_count").as("n_cjk"), ParityOracles.cjkCountHof(col("text")).as("h_cjk"),
+      c.getField("punct_count").as("n_punct"), ParityOracles.punctCountHof(col("text")).as("h_punct"),
+      c.getField("symbol_count").as("n_sym"), ParityOracles.symbolCountHof(col("text")).as("h_sym"))
     val bad = both.filter(
       col("n_char") =!= col("h_char") || col("n_tok") =!= col("h_tok") ||
       col("n_dis") =!= col("h_dis") || col("n_sub") =!= col("h_sub") ||
@@ -318,10 +318,10 @@ class DatapipeSpec extends AnyFunSuite {
     // both formulations, not null
     def qualityHof(text: org.apache.spark.sql.Column) = {
       val n = length(text)
-      val punctRatio = TextStats.punctCountHof(text).cast("double") /
+      val punctRatio = ParityOracles.punctCountHof(text).cast("double") /
         greatest(n, lit(1)).cast("double")
-      val stopRatio = TextStats.stopwordCountHof(text).cast("double") /
-        greatest(TextStats.tokenCountHof(text), lit(1)).cast("double")
+      val stopRatio = ParityOracles.stopwordCountHof(text).cast("double") /
+        greatest(ParityOracles.tokenCountHof(text), lit(1)).cast("double")
       val lenScore = when(n.between(50, 2000), 1.0)
         .when(n.between(10, 5000), 0.5).otherwise(0.0)
       round(lenScore * 0.4 + least(stopRatio * lit(4.0), lit(1.0)) * 0.4 +
@@ -329,9 +329,9 @@ class DatapipeSpec extends AnyFunSuite {
     }
     def langIdHof(text: org.apache.spark.sql.Column) = {
       val n = greatest(length(text), lit(1))
-      val stopRatio = TextStats.stopwordCountHof(text).cast("double") /
-        greatest(TextStats.tokenCountHof(text), lit(1)).cast("double")
-      when(TextStats.cjkCountHof(text).cast("double") / n.cast("double") > 0.3, "zh")
+      val stopRatio = ParityOracles.stopwordCountHof(text).cast("double") /
+        greatest(ParityOracles.tokenCountHof(text), lit(1)).cast("double")
+      when(ParityOracles.cjkCountHof(text).cast("double") / n.cast("double") > 0.3, "zh")
         .when(stopRatio > 0.02, "en")
         .otherwise("unk")
     }
@@ -359,7 +359,7 @@ class DatapipeSpec extends AnyFunSuite {
     Seq(1, 4, 8, 16).foreach { planes =>
       val both = embs.select(col("vec_id"),
         Similarity.signBucket(col("v"), planes).as("native"),
-        Similarity.signBucketHof(col("v"), planes).as("hof"))
+        ParityOracles.signBucketHof(col("v"), planes).as("hof"))
       assert(both.filter(col("native") =!= col("hof")).count() === 0,
         s"sign-bucket divergence at planes=$planes")
     }
@@ -485,6 +485,26 @@ class DatapipeSpec extends AnyFunSuite {
     assert(recallTrained > recallSeed,
       f"trained recall $recallTrained%.3f ≤ seed recall $recallSeed%.3f")
     assert(recallTrained > 0.9, f"trained recall too low: $recallTrained%.3f")
+  }
+
+  test("k-means refit on ragged and null vectors: no throw, null rows dropped") {
+    // id 1 has no vector, so the seeds are ids 0 and 2; seed 2 and every
+    // member of its cell are 2-dimensional, so that cell's mean of the 3rd
+    // dimension is null (the previous centroid has no such component: 0)
+    val embs = Seq[(Long, Seq[Double])](
+      (0L, Seq(1.0, 0.0, 0.0)), (1L, null), (2L, Seq(0.0, 1.0)),
+      (3L, Seq(0.9, 0.1, 0.2)), (4L, Seq(0.1, 0.9)), (5L, Seq(0.2, 0.8)),
+      (6L, Seq(0.95))).toDF("vec_id", "v")
+    val idx = Similarity.trainCentroidsAudited(embs, "vec_id", "v", k = 2, iters = 3)
+    val cents = idx.centroids.as[(Long, Seq[Double])].collect().sortBy(_._1)
+    assert(cents.map(_._1).toSeq === Seq(0L, 1L))
+    assert(cents.forall(_._2.forall(x => !x.isNaN && !x.isInfinite)))
+    assert(cents(1)._2.drop(2).forall(_ == 0.0), s"cell 1: ${cents(1)._2}")
+    assert(idx.bestQe.compareTo(idx.seedQe) <= 0)
+    val cells = Similarity.assignCells(
+      embs.select(col("vec_id").as("id"), col("v")), idx.centroids)
+    assert(cells.select("id").as[Long].collect().sorted.toSeq ===
+      Seq(0L, 2L, 3L, 4L, 5L, 6L))
   }
 
   test("text stats / quality / langid expressions") {
@@ -1034,7 +1054,7 @@ class DatapipeSpec extends AnyFunSuite {
         .mkString(" "))).toDF("doc_id", "text")
     val a = Dedup.cdcChunks(docs, "doc_id", "text", avgWords = 8)
       .as[(Long, Long, String, Long)].collect().sorted.toSeq
-    val b = Dedup.cdcChunksHof(docs, "doc_id", "text", avgWords = 8)
+    val b = ParityOracles.cdcChunksHof(docs, "doc_id", "text", avgWords = 8)
       .as[(Long, Long, String, Long)].collect().sorted.toSeq
     assert(a === b)
   }

@@ -87,8 +87,11 @@ class KgParitySpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       val seeds = m2e.select("mention")
+      val dict = m2e.select("mention", "entities")
+        .as[(String, Seq[String])].collect().toMap
       def kb(tooLarge: Boolean) = KbExpand.expand(spark, seeds, m2e, avOverRdd,
           graft.core.Rules.recursivePreds, driverThreshold = 1000000L,
+          m2eCollected = if (tooLarge) None else Some(dict),
           m2eTooLarge = tooLarge)
         .as[(String, String, String)].collect().toSet
       val dataflow = kb(tooLarge = true)
