@@ -31,7 +31,7 @@ object CrawlMain {
     // alias edges, the caller's counts) — materialize it once
     val kb = KbExpand.expand(spark, mentions, dict,
       CorpusData.avpairDF(spark, cfg), rules.recursive,
-      m2eTooLarge = m2e.isEmpty).localCheckpoint()
+      m2eCollected = m2e).localCheckpoint()
     val labels = Canon.nodeLabels(kb, Rules.categoryPred, rules.labelCol)
       .localCheckpoint()
     val canon = Canon.canonicalMap(kb, Rules.categoryPred, Rules.aliasPreds,

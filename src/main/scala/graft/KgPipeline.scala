@@ -78,7 +78,7 @@ object KgPipeline {
     // session degrade 22 s → 29 s → 37 s without this and hold 21-24 s
     // with it (the accumulated state starves the fixed-size executors);
     // the GC itself costs well under a second against a multi-second job.
-    if (sys.env.getOrElse("SPARK_GRAFT_ENTRY_GC", "1") != "0") System.gc()
+    System.gc()
 
     // Stage boundaries: snapshot commit when checkpointing. Without io the
     // corpus-side stages (normalized docs, emitted triples) stay lazy:
@@ -136,8 +136,7 @@ object KgPipeline {
         val (mentions, dict) =
           Mentions.seedMentions(spark, textSpans(docs), ment2ent, dimBound)
         KbExpand.expand(spark, mentions, ment2ent, avpair, Rules.recursivePreds,
-          driverThreshold = dimThreshold, m2eCollected = dict,
-          m2eTooLarge = dict.isEmpty)
+          driverThreshold = dimThreshold, m2eCollected = dict)
       })
       (kb, small(stage("canon_map", Seq("kb_triples")) {
         Canon.canonicalMap(kb, Rules.categoryPred, Rules.aliasPreds,
@@ -148,21 +147,10 @@ object KgPipeline {
     // weibo_triples does not depend on kb_triples → canon_map
     val (weibo, (kb, canonMap)) = both(weiboStage, dimStages)
 
-    val kbT = kb.select(col("subj"), col("pred"), col("obj"),
-      lit(null).cast("string").as("doc_id"), lit(-1).as("span_offset"))
+    val kbT = kbTriples(kb)
 
     val deduped = stage("triples", Seq("weibo_triples", "kb_triples", "canon_map")) {
-      val all = Canon.canonicalize(weibo.unionByName(kbT), canonMap)
-      // Two-phase dedup (SURVEY.md §4.2.5): partial hash-agg per partition,
-      // then ONE shuffle hashed on the FULL (subj, pred, obj) key — never on
-      // subj alone: the planted hot root makes subj heavily skewed (one
-      // celebrity subject owns ~30% of repost triples) and a subj-keyed
-      // exchange creates a straggler partition. The composite key is
-      // high-cardinality and skew-free; AQE coalesces the final width.
-      all
-        .groupBy("subj", "pred", "obj")
-        .agg(min(col("doc_id")).as("doc_id"),
-          min(col("span_offset")).as("span_offset"))
+      dedupTriples(Canon.canonicalize(weibo.unionByName(kbT), canonMap))
     }
     // io's commit already materialized the triples; otherwise share one run
     val triples = if (io.isDefined) deduped else SharedRows(deduped)
@@ -180,6 +168,24 @@ object KgPipeline {
       })
     Outputs(triples, vertices, edges)
   }
+
+  /** KB closure triples in the triple schema: no document provenance
+    * (null `doc_id`, `span_offset` -1). */
+  private[graft] def kbTriples(kb: DataFrame): DataFrame =
+    kb.select(col("subj"), col("pred"), col("obj"),
+      lit(null).cast("string").as("doc_id"), lit(-1).as("span_offset"))
+
+  /** Two-phase dedup (SURVEY.md §4.2.5) to one row per (subj, pred, obj),
+    * keeping the min provenance: partial hash-agg per partition, then ONE
+    * shuffle hashed on the FULL key — never on subj alone: the planted hot
+    * root makes subj heavily skewed (one celebrity subject owns ~30% of
+    * repost triples) and a subj-keyed exchange creates a straggler
+    * partition. The composite key is high-cardinality and skew-free; AQE
+    * coalesces the final width. */
+  private[graft] def dedupTriples(all: DataFrame): DataFrame =
+    all.groupBy("subj", "pred", "obj")
+      .agg(min(col("doc_id")).as("doc_id"),
+        min(col("span_offset")).as("span_offset"))
 
   /** Evaluates two independent branches. With `parallel` they run side by
     * side: `b` on a new thread while `a` runs on the caller's, so each

@@ -4,9 +4,13 @@ import graft.core.{Bucketing, Rules}
 import graft.datapipe.{Dedup, Multimodal, Quantiles, Similarity, TextStats}
 import graft.gen.{Corpus, CorpusData}
 import graft.stages._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.streaming.{Doc, Sessionize, StreamingDedup, StreamingFuzzyDedup}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import scala.reflect.runtime.universe.TypeTag
 
 /** Driver contract — one `queries` entry per implemented operator family
   * (SURVEY.md §2) plus the training-data-pipeline operators; `oracleSql` is
@@ -112,6 +116,54 @@ object SparkEntry {
   private def blogEdges(s: SparkSession): DataFrame =
     Normalize.blogs(CorpusData.docsDF(s, kgCfg))
       .filter(col("valid")).select("mid", "repost_id")
+
+  /** Runs a streaming query over a driver-fed MemoryStream — the
+    * verification seam of the `*_stream` queries: `start` builds the query
+    * over the stream, each batch is fed in turn and processed to
+    * completion, and the query is stopped even when a batch fails. */
+  private def runStream[A <: Product : TypeTag](s: SparkSession, batches: Seq[A]*)
+                                               (start: Dataset[A] => StreamingQuery)
+      : Unit = {
+    val stream = MemoryStream(Encoders.product[A], s.sqlContext)
+    val query = start(stream.toDS())
+    try batches.foreach { b => stream.addData(b); query.processAllAvailable() }
+    finally query.stop()
+  }
+
+  /** The event-time `*_stream` queries: the events as (key, ts) rows
+    * through `plan` into the memory sink `qname`, then one far-future
+    * sentinel event, which advances the watermark past every open window
+    * or session so append mode emits them all. The sink's rows without the
+    * sentinel's; None when there are no events. */
+  private def eventTimeStream(s: SparkSession, d: String, qname: String)
+                             (plan: Dataset[Sessionize.Ev] => DataFrame)
+      : Option[DataFrame] = {
+    import s.implicits._
+    val evs = t(s, d, "events")
+      .select(col("event_type").cast("string").as("key"),
+        col("ts").cast("timestamp").as("ts"))
+      .as[Sessionize.Ev].collect().toSeq
+    if (evs.isEmpty) None
+    else {
+      val maxTs = evs.iterator.map(_.ts.getTime).max
+      val sentinel = Sessionize.Ev(" wm",
+        new java.sql.Timestamp(maxTs + 30L * 24 * 3600 * 1000))
+      s.catalog.dropTempView(qname)
+      runStream(s, evs, Seq(sentinel))(ds =>
+        plan(ds).writeStream.format("memory").queryName(qname)
+          .outputMode("append").start())
+      Some(s.table(qname).filter(col("key") =!= sentinel.key))
+    }
+  }
+
+  /** The documents as the incremental-dedup queries' two batches: the
+    * accumulated corpus (doc_id < 400), then the "daily" batch. */
+  private def docBatches(s: SparkSession, d: String): (Seq[Doc], Seq[Doc]) = {
+    import s.implicits._
+    t(s, d, "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      .as[Doc].collect().toSeq.partition(_.doc_id < 400)
+  }
 
   /** Flagship: full KG construction on sf0.001-scale corpus. */
   def entry(spark: SparkSession): DataFrame = kgOutputs(spark).triples
@@ -242,82 +294,29 @@ object SparkEntry {
     "q_event_windows" -> ((s, d) =>
       // the streaming windowed-agg operator, oracle-checked on batch
       graft.streaming.Windowed.eventCounts(t(s, d, "events"), "ts", "event_type")),
-    "q_event_windows_stream" -> ((s, d) => {
+    "q_event_windows_stream" -> ((s, d) =>
       // the STREAM path of the windowed aggregation (readStream → watermark
       // → tumbling window → append-mode finalization), surfaced to the
       // driver gate like q_sessionize_stream: same rows, same oracle as the
-      // batch twin. A far-future sentinel advances the watermark past every
-      // open window so append mode flushes them all.
-      import graft.streaming.Sessionize
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val evs = t(s, d, "events")
-        .select(col("event_type").cast("string").as("key"),
-          col("ts").cast("timestamp").as("ts"))
-        .as[Sessionize.Ev].collect()
-      if (evs.isEmpty)
-        s.emptyDataFrame.select(lit(0L).as("window_start"),
-          lit("").as("event_type"), lit(0L).as("n")).limit(0)
-      else {
-        val maxTs = evs.iterator.map(_.ts.getTime).max
-        val qname = "graft_event_windows_stream"
-        s.catalog.dropTempView(qname)
-        val stream = MemoryStream[Sessionize.Ev]
-        val query = graft.streaming.Windowed
-          .eventCounts(stream.toDS().toDF(), "ts", "key")
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("append").start()
-        try {
-          stream.addData(evs.toSeq)
-          query.processAllAvailable()
-          stream.addData(Seq(Sessionize.Ev(" wm",
-            new java.sql.Timestamp(maxTs + 30L * 24 * 3600 * 1000))))
-          query.processAllAvailable()
-        } finally query.stop()
-        s.table(qname).filter(col("key") =!= " wm")
-          .select(col("window_start"), col("key").as("event_type"), col("n"))
-      }
-    }),
+      // batch twin.
+      eventTimeStream(s, d, "graft_event_windows_stream")(ds =>
+          graft.streaming.Windowed.eventCounts(ds.toDF(), "ts", "key"))
+        .map(_.select(col("window_start"), col("key").as("event_type"), col("n")))
+        .getOrElse(s.emptyDataFrame.select(lit(0L).as("window_start"),
+          lit("").as("event_type"), lit(0L).as("n")).limit(0))),
     "q_sessionize" -> ((s, d) =>
       // gap-based sessionization (batch twin of the stateful stream op)
       graft.streaming.Sessionize.sessionsBatch(t(s, d, "events"),
         "event_type", "ts", gapSec = 3600)),
-    "q_sessionize_stream" -> ((s, d) => {
+    "q_sessionize_stream" -> ((s, d) =>
       // the STREAM path of the same operator (flatMapGroupsWithState with
       // event-time timeout), surfaced to the driver gate: same rows, same
       // oracle as the batch twin. MemoryStream is necessarily fed from the
       // driver — that is the verification seam (production reads a source),
       // and the stateful operator itself runs distributed.
-      import graft.streaming.Sessionize
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val evs = t(s, d, "events")
-        .select(col("event_type").cast("string").as("key"),
-          col("ts").cast("timestamp").as("ts"))
-        .as[Sessionize.Ev].collect()
-      if (evs.isEmpty) s.emptyDataset[Sessionize.Session].toDF()
-      else {
-      val maxTs = evs.iterator.map(_.ts.getTime).max
-      val qname = "graft_sessionize_stream"
-      s.catalog.dropTempView(qname)
-      val stream = MemoryStream[Sessionize.Ev]
-      val query = Sessionize.sessionsStream(stream.toDS(), gapSec = 3600)
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-      try {
-        stream.addData(evs.toSeq)
-        query.processAllAvailable()
-        // one far-future sentinel advances the (global) watermark past every
-        // open session's gap so the event-time timeouts close them all
-        stream.addData(Seq(Sessionize.Ev(" wm",
-          new java.sql.Timestamp(maxTs + 30L * 24 * 3600 * 1000))))
-        query.processAllAvailable()
-      } finally query.stop()
-      s.table(qname).filter(col("key") =!= " wm")
-      }
-    }),
+      eventTimeStream(s, d, "graft_sessionize_stream")(ds =>
+          Sessionize.sessionsStream(ds, gapSec = 3600).toDF())
+        .getOrElse(s.emptyDataset(Encoders.product[Sessionize.Session]).toDF())),
 
     // ---- training-data ops: text ---------------------------------------------
     "q_dedup_exact" -> ((s, d) =>
@@ -564,24 +563,10 @@ object SparkEntry {
       // the batch twin (q_dedup_incremental — same oracle). MemoryStream is
       // necessarily fed from the driver — the documented verification seam;
       // the per-batch dedup dataflow itself runs distributed.
-      import graft.streaming.StreamingDedup
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val docs = t(s, d, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        .as[StreamingDedup.Doc].collect()
-      val (oldBatch, newBatch) = docs.partition(_.doc_id < 400)
+      val (oldBatch, newBatch) = docBatches(s, d)
       val dir = freshRunDir("sdedup").toString
-      val stream = MemoryStream[StreamingDedup.Doc]
-      val query = StreamingDedup.start(s, stream.toDS().toDF(),
-        s"$dir/table", s"$dir/ckpt")
-      try {
-        stream.addData(oldBatch.toSeq)
-        query.processAllAvailable()
-        stream.addData(newBatch.toSeq)
-        query.processAllAvailable()
-      } finally query.stop()
+      runStream(s, oldBatch, newBatch)(ds =>
+        StreamingDedup.start(s, ds.toDF(), s"$dir/table", s"$dir/ckpt"))
       StreamingDedup.landedRange(s, s"$dir/table", 0)
     }),
     "q_fuzzy_incremental_stream" -> ((s, d) => {
@@ -592,29 +577,15 @@ object SparkEntry {
       // 1, and the epoch-tagged survivors must equal the batch twin — same
       // oracle. MemoryStream is fed from the driver (the documented
       // verification seam); each batch's dataflow runs distributed.
-      import graft.streaming.StreamingFuzzyDedup
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
       s.sql("DROP DATABASE IF EXISTS graft_fzs CASCADE")
       val wh = freshRunDir("fzs-wh")
       java.nio.file.Files.delete(wh) // CREATE DATABASE owns (and creates) it
       s.sql(s"CREATE DATABASE graft_fzs LOCATION '${wh.toString}'")
-      val docs = t(s, d, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        .as[StreamingFuzzyDedup.Doc].collect()
-      val (oldBatch, newBatch) = docs.partition(_.doc_id < 400)
+      val (oldBatch, newBatch) = docBatches(s, d)
       val dir = freshRunDir("sfuzzy").toString
-      val stream = MemoryStream[StreamingFuzzyDedup.Doc]
-      val query = StreamingFuzzyDedup.start(s, stream.toDS().toDF(),
-        s"$dir/table", s"$dir/ckpt", "graft_fzs.fuzzy_sigs",
-        Bucketing.BucketSpec("skey", 8))
-      try {
-        stream.addData(oldBatch.toSeq)
-        query.processAllAvailable()
-        stream.addData(newBatch.toSeq)
-        query.processAllAvailable()
-      } finally query.stop()
+      runStream(s, oldBatch, newBatch)(ds =>
+        StreamingFuzzyDedup.start(s, ds.toDF(), s"$dir/table", s"$dir/ckpt",
+          "graft_fzs.fuzzy_sigs", Bucketing.BucketSpec("skey", 8)))
       StreamingFuzzyDedup.landedWithEpochs(s, s"$dir/table")
         .select(col("epoch"), col("id").as("doc_id"))
     }),
@@ -981,7 +952,7 @@ object SparkEntry {
         KgPipeline.textSpans(CorpusData.docsDF(s, kgCfg)), dict)
       val kb = KbExpand.expand(s, mentions, dict,
         CorpusData.avpairDF(s, kgCfg), Rules.recursivePreds,
-        m2eTooLarge = m2e.isEmpty)
+        m2eCollected = m2e)
       Canon.canonicalMap(kb, Rules.categoryPred, Rules.aliasPreds)
     }),
     "q_tree_depth_histogram" -> ((s, _) =>

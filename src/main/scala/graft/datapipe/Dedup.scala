@@ -159,6 +159,16 @@ object Dedup {
       .distinct()
   }
 
+  /** One (id, fp) row per normalized content fingerprint of `docs`: the
+    * first occurrence (min id) wins. The key side of every incremental
+    * exact dedup. */
+  private[graft] def firstByFingerprint(docs: DataFrame, idCol: String,
+                                        textCol: String): DataFrame =
+    docs
+      .select(col(idCol).as("id"), TextStats.fingerprint(col(textCol)).as("fp"))
+      .groupBy("fp").agg(min(col("id")).as("id"))
+      .select("id", "fp")
+
   /** Incremental exact dedup — the daily-crawl production shape: from a new
     * `batch`, keep only the first within-batch occurrence (min id) of each
     * normalized fingerprint that does NOT already appear in the accumulated
@@ -169,20 +179,9 @@ object Dedup {
     * state, then snapshot-append the survivors). */
   def incrementalDedup(batch: DataFrame, kept: DataFrame,
                        idCol: String, textCol: String): DataFrame =
-    incrementalDedupFp(batch,
-      kept.select(TextStats.fingerprint(col(textCol)).as("fp")),
-      idCol, textCol)
-
-  /** Fingerprint-keyed variant for callers that PERSIST the committed key
-    * set (the streaming epoch-append path): the accumulated side is a
-    * narrow `fp` column read from a snapshot — never re-fingerprinted
-    * document text. `keptFps` must have an `fp` column. */
-  def incrementalDedupFp(batch: DataFrame, keptFps: DataFrame,
-                         idCol: String, textCol: String): DataFrame =
-    batch
-      .select(col(idCol).as("id"), TextStats.fingerprint(col(textCol)).as("fp"))
-      .groupBy("fp").agg(min(col("id")).as("id"))
-      .join(keptFps.select("fp").distinct(), Seq("fp"), "left_anti")
+    firstByFingerprint(batch, idCol, textCol)
+      .join(kept.select(TextStats.fingerprint(col(textCol)).as("fp")).distinct(),
+        Seq("fp"), "left_anti")
       .select("id", "fp")
 
   /** Committed-key-store form of the daily incremental dedup: the
@@ -205,9 +204,7 @@ object Dedup {
       : DataFrame = {
     require(spec.key == "fp", s"committed store must bucket on fp, got ${spec.key}")
     val spark = batch.sparkSession
-    val newKeys = batch
-      .select(col(idCol).as("id"), TextStats.fingerprint(col(textCol)).as("fp"))
-      .groupBy("fp").agg(min(col("id")).as("id"))
+    val newKeys = firstByFingerprint(batch, idCol, textCol)
     val survivors =
       (if (spark.catalog.tableExists(keptTable))
          newKeys.join(spark.table(keptTable).select("fp"), Seq("fp"), "left_anti")

@@ -111,7 +111,19 @@ object Canon {
       .limit(math.min(threshold, Int.MaxValue - 2L).toInt + 1)
       .as[(String, String)].collect()
     if (pairs.length > threshold) return None
-    val parent = scala.collection.mutable.HashMap[String, String]()
+    val uf = new MinRootUnionFind
+    pairs.foreach { case (a, b) => uf.union(a, b) }
+    // sym is symmetric → every node occurs as src
+    val nodes = pairs.iterator.map(_._1).toSet
+    lastCcRounds = 0
+    Some(nodes.iterator.map(n => (n, uf.find(n))).toSeq.toDF("name", "comp"))
+  }
+
+  /** Driver union-find over names: path-compressing `find`, and `union`
+    * roots each set at its minimum name — the component label the
+    * dataflow kernels propagate. */
+  private final class MinRootUnionFind {
+    private val parent = scala.collection.mutable.HashMap[String, String]()
     def find(x: String): String = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent(r)
@@ -119,14 +131,10 @@ object Canon {
       while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    pairs.foreach { case (a, b) =>
+    def union(a: String, b: String): Unit = {
       val ra = find(a); val rb = find(b)
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
-    // sym is symmetric → every node occurs as src
-    val nodes = pairs.iterator.map(_._1).toSet
-    lastCcRounds = 0
-    Some(nodes.iterator.map(n => (n, find(n))).toSeq.toDF("name", "comp"))
   }
 
   /** Connected components in O(log n) shuffle rounds — the alternating
@@ -250,22 +258,12 @@ object Canon {
     // the quadratic containment loop is only sane for small name sets;
     // larger dictionaries use the bigram-blocked dataflow
     if (names.size > 20000) return None
-    val parent = scala.collection.mutable.HashMap[String, String]()
-    def find(x: String): String = {
-      var r = x; while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    def union(a: String, b: String): Unit = {
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
+    val uf = new MinRootUnionFind
     for (a <- names; b <- names)
       if (a != b && b.length >= 2 && a.contains(b) &&
-        labelMap(b).subsetOf(labelMap(a))) union(a, b)
-    rows.foreach { case (s, p, o) => if (aliasPreds.contains(p)) union(s, o) }
-    Some(names.map(n => (n, find(n))).filter(x => x._1 != x._2))
+        labelMap(b).subsetOf(labelMap(a))) uf.union(a, b)
+    rows.foreach { case (s, p, o) => if (aliasPreds.contains(p)) uf.union(s, o) }
+    Some(names.map(n => (n, uf.find(n))).filter(x => x._1 != x._2))
   }
 
   /** Full canonical map for a KB triple set: name → canonical name (only

@@ -1,7 +1,6 @@
 package graft.stages
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Stage 5 — materialize the deduplicated labeled-property graph.
@@ -11,8 +10,8 @@ import org.apache.spark.sql.functions._
   *   vertices(vertex_id, name, labels)   edges(src, dst, rel)
   *
   * Ids are stable `xxhash64(name)` — no transactional counter (SURVEY.md
-  * §7.4); contiguous ids exist only in the small export path (window
-  * row_number over the export set, DumpGraphToText.kt:93–108 image).
+  * §7.4); contiguous ids exist only in the small export path
+  * (`Export.entityIds`, DumpGraphToText.kt:93–108 image).
   * Dedup is the north-star two-phase hash aggregate: Catalyst plans
   * partial-per-partition + final for dropDuplicates, and the exchange
   * between them is the one the final aggregate requires. Its initial width
@@ -44,14 +43,4 @@ object GraphOut {
       .select(xxhash64(col("subj")).as("src"), xxhash64(col("obj")).as("dst"),
         col("pred").as("rel"))
       .dropDuplicates("src", "dst", "rel")
-
-  /** Small-export path: contiguous integer ids in deterministic order
-    * (DumpGraphToText.kt:93–108's buildEntityIndex, made deterministic by
-    * ordering on name instead of arrival). Single-partition window — export
-    * scale only, never in the core pipeline. */
-  def exportIds(vertices: DataFrame): DataFrame =
-    vertices.withColumn("export_id",
-      // literal partition key: single partition as before (export scale),
-      // without the WindowExec no-partition warning
-      row_number().over(Window.partitionBy(lit(0)).orderBy(col("name"))) - 1)
 }

@@ -64,8 +64,9 @@ object KbExpand {
     *                  our KB alias chains converge in ≪ 20 rounds)
     * @param driverThreshold driver fast-path bound on each dim (0: dataflow only)
     * @param m2eCollected the ment2ent dimension, already collected by the
-    *                  caller; the fast path runs only when it is given
-    * @param m2eTooLarge  the caller found ment2ent over the bound: dataflow,
+    *                  caller; the fast path runs, and ment2ent is
+    *                  force-broadcast, only when it is given. A caller that
+    *                  found ment2ent over the bound passes None: dataflow,
     *                  with no driver collect of either dim
     * @return kb triples (subj, pred, obj) distinct
     */
@@ -77,8 +78,7 @@ object KbExpand {
       recursivePreds: Set[String],
       maxRounds: Int = 20,
       driverThreshold: Long = 0L,
-      m2eCollected: Option[Map[String, Seq[String]]] = None,
-      m2eTooLarge: Boolean = false): DataFrame = {
+      m2eCollected: Option[Map[String, Seq[String]]] = None): DataFrame = {
 
     // The BFS closure is DIMENSION-bounded: it expands over the KB tables,
     // never over per-doc rows (the doc side is already reduced to distinct
@@ -91,9 +91,9 @@ object KbExpand {
     // Mentions.seedMentions' limit-N+1 probe); avpair is then collected
     // under the same guard folded into the collect (limit N+1, check the
     // length — one driver job, not a count() followed by a collect()). A
-    // caller that found ment2ent over the bound (`m2eTooLarge`) rules the
-    // fast path out: avpair is then never collected.
-    if (driverThreshold > 0 && !m2eTooLarge && m2eCollected.isDefined) {
+    // caller that found ment2ent over the bound passes no dictionary, which
+    // rules the fast path out: avpair is then never collected.
+    if (driverThreshold > 0 && m2eCollected.isDefined) {
       val avLimited = avpair.select("entity", "pred", "obj")
         .limit(math.min(driverThreshold, Int.MaxValue - 2L).toInt + 1).collect()
       if (avLimited.length <= driverThreshold) {
@@ -112,10 +112,10 @@ object KbExpand {
       }
     }
 
-    // an over-bound dictionary must not be force-broadcast either — let the
-    // planner pick the join (AQE broadcasts iff it actually fits)
+    // an over-bound (uncollected) dictionary must not be force-broadcast
+    // either — let the planner pick the join (AQE broadcasts iff it fits)
     val m2eJoin: DataFrame => DataFrame =
-      df => if (m2eTooLarge) df else broadcast(df)
+      df => if (m2eCollected.isDefined) broadcast(df) else df
 
     val recPreds = recursivePreds.toSeq
     var frontier = mentions.select(col("mention")).distinct().localCheckpoint()

@@ -135,7 +135,7 @@ object Mentions {
     * ([[detectBySubstring]]) and the dictionary never reaches the driver.
     * @return (single-column DF `mention`, distinct; the mention → entities
     *   dictionary when it fit — hand it to KbExpand.expand as
-    *   `m2eCollected`, and `m2eTooLarge = dict.isEmpty`) */
+    *   `m2eCollected`) */
   def seedMentions(spark: SparkSession, textSpans: DataFrame, ment2ent: DataFrame,
                    bound: Long = 2000000L)
       : (DataFrame, Option[Map[String, Seq[String]]]) = {

@@ -29,10 +29,6 @@ object Normalize {
   def spansSorted(c: Column): Column =
     array_sort(c, (l, r) => l.getField("offset") - r.getField("offset"))
 
-  /** Rewrite `spans` to offset-sorted exactly once per row. */
-  def withSortedSpans(docs: DataFrame): DataFrame =
-    docs.withColumn("spans", spansSorted(col("spans")))
-
   /** blog/comment classifier — native codegen'd early-exit walk, not the
     * interpreted exists() HOF (one lambda dispatch per element per row on
     * the hottest filter in the pipeline; see functions.HasSpanKind). */

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.core.TableIO
 import graft.datapipe.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming incremental exact-dedup — the daily-crawl shape end-to-end in
@@ -15,14 +14,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (foreachBatch exactly-once via the query checkpoint, idempotent via the
   * anti-join), and — like [[StreamingKg]] — the committed state read per
   * batch is a COMPACTED fingerprint snapshot plus a bounded epoch tail,
-  * not the union of every epoch ever landed. The exchange carries md5
-  * fingerprints, never document text (Dedup.incrementalDedupFp). */
+  * not the union of every epoch ever landed ([[Epochs.appendNovel]]). The
+  * exchange carries md5 fingerprints, never document text. */
 object StreamingDedup {
 
-  case class Doc(doc_id: Long, text: String)
-
   private val epochStage = "kept_docs"
-  private val keyStage = "committed_fps"
 
   /** Start the incremental-dedup query over a (doc_id, text) stream.
     * `tableDir` accumulates `kept_docs` epoch snapshots (id, fp). */
@@ -33,37 +29,9 @@ object StreamingDedup {
     docsStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val covered = io.counterOf(keyStage, "covers_epochs")
-          .getOrElse(-1L).toInt
-        val last = io.lastCommitted(epochStage)
-        val compacted =
-          if (io.hasCommitted(keyStage)) Some(io.read(keyStage)) else None
-        val tail =
-          if (last > covered)
-            Some(io.readRange(epochStage, covered).select("fp"))
-          else None
-        val committed = (compacted.toSeq ++ tail.toSeq)
-          .reduceOption(_ unionByName _)
-        val novel = committed match {
-          case Some(k) => Dedup.incrementalDedupFp(batch, k, idCol, textCol)
-          case None => Dedup.incrementalDedupFp(batch,
-            batch.sparkSession.emptyDataFrame
-              .select(lit("").as("fp")).limit(0), idCol, textCol)
-        }
-        io.commit(epochStage, novel, counters = Map("batch_id" -> batchId))
-        // fold the epoch tail into the key snapshot every compactEvery epochs
-        val newLast = io.lastCommitted(epochStage)
-        if (newLast - covered >= compactEvery) {
-          // epochs are pairwise disjoint by construction (each was
-          // anti-joined against everything before it) — plain union IS the
-          // distinct key set
-          val newKeys = (compacted.toSeq :+
-            io.readRange(epochStage, covered).select("fp"))
-            .reduce(_ unionByName _)
-          io.commit(keyStage, newKeys,
-            counters = Map("covers_epochs" -> newLast.toLong))
-        }
-        ()
+        Epochs.appendNovel(io, epochStage, "committed_fps",
+          Dedup.firstByFingerprint(batch, idCol, textCol), Seq("fp"),
+          batchId, compactEvery)
       }
       .start()
   }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batch ScrubPipeline pays daily is never re-paid here.
   *
   * Replay discipline: foreachBatch is at-least-once; a re-delivered batch
-  * id is SKIPPED outright (epoch counter guard) rather than re-screened,
+  * id is SKIPPED outright ([[Epochs.replayed]]) rather than re-screened,
   * because the greedy fuzzy keep rule is not replay-idempotent the way the
   * exact anti-join is — a transitively-clustered non-survivor whose only
   * threshold link was to another non-survivor would pass the store screen
@@ -29,8 +29,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * skips the second append — so the epoch snapshot the replay commits
   * holds exactly the survivors whose signatures the store already has. */
 object StreamingFuzzyDedup {
-
-  case class Doc(doc_id: Long, text: String)
 
   private val epochStage = "kept_docs_fuzzy"
 
@@ -51,12 +49,11 @@ object StreamingFuzzyDedup {
     docsStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!io.counterOf(epochStage, "batch_id").exists(_ >= batchId)) {
+        if (!Epochs.replayed(io, epochStage, batchId)) {
           val survivors = Dedup.incrementalFuzzyCommit(
             batch, idCol, textCol, sigTable, spec, threshold = threshold,
             batchId = batchId)
-          io.commit(epochStage, survivors,
-            counters = Map("batch_id" -> batchId))
+          Epochs.commit(io, epochStage, survivors, batchId)
           if (compactEvery > 0 &&
               (io.lastCommitted(epochStage) + 1) % compactEvery == 0)
             graft.core.Bucketing.compact(spark, sigTable, spec)

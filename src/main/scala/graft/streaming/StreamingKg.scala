@@ -4,7 +4,6 @@ import graft.core.{Rules, TableIO}
 import graft.stages._
 import graft.KgPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured-Streaming seam (SURVEY.md §2.7).
@@ -33,28 +32,14 @@ object StreamingKg {
     val (mentions, dict) =
       Mentions.seedMentions(spark, KgPipeline.textSpans(batch), ment2ent)
     val kb = KbExpand.expand(spark, mentions, ment2ent, avpair,
-      Rules.recursivePreds, driverThreshold = 2000000L,
-      m2eCollected = dict, m2eTooLarge = dict.isEmpty)
-    weibo.unionByName(kb.select(col("subj"), col("pred"), col("obj"),
-        lit(null).cast("string").as("doc_id"), lit(-1).as("span_offset")))
-      .groupBy("subj", "pred", "obj")
-      .agg(min(col("doc_id")).as("doc_id"), min(col("span_offset")).as("span_offset"))
+      Rules.recursivePreds, driverThreshold = 2000000L, m2eCollected = dict)
+    KgPipeline.dedupTriples(weibo.unionByName(KgPipeline.kbTriples(kb)))
   }
 
-  private val keyCols = Seq("subj", "pred", "obj")
-
   /** Start the incremental ingestion query. `tableDir` accumulates epoch
-    * snapshots under stage `stream_triples`.
-    *
-    * Per-batch dedup joins against a COMPACTED key snapshot (stage
-    * `committed_keys`, narrow 3-column parquet) plus only the ≤`compactEvery`
-    * epochs committed since the last compaction — NOT the union of every
-    * epoch ever landed. The per-batch plan therefore has a bounded number of
-    * inputs (one sequential columnar key scan + a bounded epoch tail) instead
-    * of a file list that grows with history; every `compactEvery` batches the
-    * tail is folded into a fresh key snapshot (amortized O(total)/C). At lake
-    * scale the compacted key table is the layout to bucket by key hash for
-    * join co-location; exact global dedup cannot scan less than the key set. */
+    * snapshots under stage `stream_triples`; each batch's novel triples are
+    * found against the compacted key snapshot `committed_keys`
+    * ([[Epochs.appendNovel]]). */
   def start(spark: SparkSession, docsStream: DataFrame, ment2ent: DataFrame,
             avpair: DataFrame, tableDir: String, checkpointDir: String,
             compactEvery: Int = 4): StreamingQuery = {
@@ -62,37 +47,9 @@ object StreamingKg {
     docsStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fresh = batchTriples(spark, batch, ment2ent, avpair)
-        val covered = io.counterOf("committed_keys", "covers_epochs")
-          .getOrElse(-1L).toInt
-        val last = io.lastCommitted("stream_triples")
-        val compacted =
-          if (io.hasCommitted("committed_keys")) Some(io.read("committed_keys"))
-          else None
-        val recentTail =
-          if (last > covered)
-            Some(io.readRange("stream_triples", covered)
-              .select(keyCols.map(col): _*))
-          else None
-        val committedKeys = (compacted.toSeq ++ recentTail.toSeq)
-          .reduceOption(_ unionByName _)
-        val novel = committedKeys
-          .fold(fresh)(k => fresh.join(k, keyCols, "left_anti"))
-        io.commit("stream_triples", novel,
-          counters = Map("batch_id" -> batchId))
-        // fold the epoch tail into the key snapshot every compactEvery epochs
-        val newLast = io.lastCommitted("stream_triples")
-        if (newLast - covered >= compactEvery) {
-          // epochs are pairwise disjoint by construction (each was
-          // anti-joined against everything before it) — plain union IS the
-          // distinct key set
-          val newKeys = (compacted.toSeq :+
-            io.readRange("stream_triples", covered).select(keyCols.map(col): _*))
-            .reduce(_ unionByName _)
-          io.commit("committed_keys", newKeys,
-            counters = Map("covers_epochs" -> newLast.toLong))
-        }
-        ()
+        Epochs.appendNovel(io, "stream_triples", "committed_keys",
+          batchTriples(spark, batch, ment2ent, avpair),
+          Seq("subj", "pred", "obj"), batchId, compactEvery)
       }
       .start()
   }

@@ -21,11 +21,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (sum is associative), so after N batches the committed counts — and
   * therefore the derived model, total included — are IDENTICAL to
   * [[graft.datapipe.LmScore.train]] over the union of all batches.
-  * Replay safety: a re-delivered batch id is skipped via the epoch
-  * counter, so at-least-once foreachBatch never double-counts. */
+  * Replay safety: a re-delivered batch id is skipped
+  * ([[Epochs.mergeCounts]]), so at-least-once foreachBatch never
+  * double-counts. */
 object StreamingLm {
-
-  case class Doc(doc_id: Long, text: String)
 
   val stage = "lm_word_counts"
 
@@ -36,19 +35,11 @@ object StreamingLm {
     docsStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!io.counterOf(stage, "batch_id").exists(_ >= batchId)) {
-          val delta = batch
-            .select(explode(TextStats.tokens(col(textCol))).as("w"))
-            .where(length(col("w")) > 0)
-            .groupBy("w").agg(count(lit(1)).as("c"))
-          val merged =
-            if (io.hasCommitted(stage))
-              io.read(stage).unionByName(delta)
-                .groupBy("w").agg(sum("c").as("c"))
-            else delta
-          io.commit(stage, merged, counters = Map("batch_id" -> batchId))
-        }
-        ()
+        val delta = batch
+          .select(explode(TextStats.tokens(col(textCol))).as("w"))
+          .where(length(col("w")) > 0)
+          .groupBy("w").agg(count(lit(1)).as("c"))
+        Epochs.mergeCounts(io, stage, delta, Seq("w"), "c", batchId)
       }
       .start()
   }

@@ -19,8 +19,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamingPacking {
 
-  case class Doc(doc_id: Long, text: String)
-
   val stage = "pack_index"
 
   /** Start the incremental-packing query over a (doc_id, text) stream;

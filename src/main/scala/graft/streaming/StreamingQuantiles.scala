@@ -3,7 +3,6 @@ package graft.streaming
 import graft.core.TableIO
 import graft.datapipe.Quantiles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming quantile-threshold refresh — the curation cutoffs ("keep the
@@ -17,8 +16,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Exactness (StreamingSpec parity): counts compose over any batch split,
   * so after N batches [[thresholds]] is IDENTICAL to
-  * `Quantiles.byKey` over the union of all batches. Replay-safe via the
-  * epoch batch-id guard. */
+  * `Quantiles.byKey` over the union of all batches. Replay-safe via
+  * [[Epochs.mergeCounts]]' batch-id guard. */
 object StreamingQuantiles {
 
   val stage = "value_counts"
@@ -33,16 +32,9 @@ object StreamingQuantiles {
     docsStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!io.counterOf(stage, "batch_id").exists(_ >= batchId)) {
-          val delta = Quantiles.countsByValue(batch, keyCol, valueOf(batch))
-          val merged =
-            if (io.hasCommitted(stage))
-              io.read(stage).unionByName(delta)
-                .groupBy(keyCol, "v").agg(sum("cnt").as("cnt"))
-            else delta
-          io.commit(stage, merged, counters = Map("batch_id" -> batchId))
-        }
-        ()
+        Epochs.mergeCounts(io, stage,
+          Quantiles.countsByValue(batch, keyCol, valueOf(batch)),
+          Seq(keyCol, "v"), "cnt", batchId)
       }
       .start()
   }

@@ -91,8 +91,7 @@ class KgParitySpec extends AnyFunSuite {
         .as[(String, Seq[String])].collect().toMap
       def kb(tooLarge: Boolean) = KbExpand.expand(spark, seeds, m2e, avOverRdd,
           graft.core.Rules.recursivePreds, driverThreshold = 1000000L,
-          m2eCollected = if (tooLarge) None else Some(dict),
-          m2eTooLarge = tooLarge)
+          m2eCollected = if (tooLarge) None else Some(dict))
         .as[(String, String, String)].collect().toSet
       val dataflow = kb(tooLarge = true)
       // listener events arrive in order: once the sentinel job's start is

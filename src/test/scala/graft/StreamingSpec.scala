@@ -55,7 +55,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming packing: epochs union to the one-shot packing; replays are no-ops") {
     import graft.streaming.StreamingPacking
-    import graft.streaming.StreamingPacking.{Doc => PDoc}
+    import graft.streaming.{Doc => PDoc}
     val tableDir = Files.createTempDirectory("spack-table").toString
     val ckpt = Files.createTempDirectory("spack-ckpt").toString
     implicit val sq = spark.sqlContext
@@ -121,7 +121,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming LM refresh: counts compose — model after N batches == one-shot train") {
     import graft.streaming.StreamingLm
-    import graft.streaming.StreamingLm.{Doc => LDoc}
+    import graft.streaming.{Doc => LDoc}
     val tableDir = Files.createTempDirectory("slm-table").toString
     val ckpt = Files.createTempDirectory("slm-ckpt").toString
     val b0 = Seq(LDoc(1, "the cat sat on the mat"), LDoc(2, "the dog ran"))
@@ -153,7 +153,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming fuzzy dedup: epochs match the batch twin, store screens near-dups") {
     import graft.streaming.StreamingFuzzyDedup
-    import graft.streaming.StreamingFuzzyDedup.{Doc => FDoc}
+    import graft.streaming.{Doc => FDoc}
     import graft.core.Bucketing.BucketSpec
     val tableDir = Files.createTempDirectory("sfuzzy-table").toString
     val ckpt = Files.createTempDirectory("sfuzzy-ckpt").toString
@@ -215,7 +215,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming incremental dedup: cross-batch duplicate keys never re-append") {
     import graft.streaming.StreamingDedup
-    import graft.streaming.StreamingDedup.{Doc => DDoc}
+    import graft.streaming.{Doc => DDoc}
     val tableDir = Files.createTempDirectory("sdedup-table").toString
     val ckpt = Files.createTempDirectory("sdedup-ckpt").toString
     implicit val sq = spark.sqlContext
@@ -355,5 +355,85 @@ class StreamingSpec extends AnyFunSuite {
       .select("subj", "pred", "obj")
       .as[(String, String, String)].collect().toSet
     assert(landed.toSet === batchRaw)
+  }
+
+  test("micro-batch replay: a re-run batch neither double-counts nor re-appends") {
+    import graft.streaming.StreamingLm
+    import graft.streaming.{Doc => LDoc}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import java.nio.file.Paths
+    import java.nio.file.attribute.FileTime
+    import scala.jdk.CollectionConverters._
+    val base = Files.createTempDirectory("stream-replay")
+    // a file source whose every file is one micro-batch, laid down before the
+    // query starts: one parquet file per frame, in ascending mtime order
+    def fileStream(name: String, batches: Seq[DataFrame]): DataFrame = {
+      val dir = Files.createDirectories(base.resolve(name))
+      batches.zipWithIndex.foreach { case (df, k) =>
+        val staged = base.resolve(s"$name-staged-$k")
+        df.coalesce(1).write.parquet(staged.toString)
+        val part = Files.list(staged).iterator.asScala
+          .find(_.getFileName.toString.endsWith(".parquet")).get
+        val file = Files.move(part, dir.resolve(s"batch-$k.parquet"))
+        Files.setLastModifiedTime(file, FileTime.fromMillis(1600000000000L + k * 60000L))
+      }
+      spark.readStream.schema(batches.head.schema)
+        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+    }
+    def run(q: StreamingQuery): StreamingQuery = {
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
+    // after both batches ran, delete batch 1's commit marker: a restart on
+    // the same checkpoint re-runs that batch from its logged offsets
+    def uncommitBatch1(ckpt: String): Unit = {
+      val commits = Paths.get(ckpt, "commits")
+      assert(Files.exists(commits.resolve("1")) && !Files.exists(commits.resolve("2")))
+      Files.delete(commits.resolve("1"))
+      Files.deleteIfExists(commits.resolve(".1.crc"))
+    }
+    def reranBatch1(q: StreamingQuery): Boolean = q.recentProgress.exists(_.batchId == 1)
+
+    // StreamingLm: the replayed batch's counts are not merged twice
+    val lmBatches = Seq(
+      Seq(LDoc(1, "the cat sat on the mat"), LDoc(2, "the dog ran")),
+      Seq(LDoc(3, "the cat and the dog sat")))
+    val lmTable = base.resolve("lm-table").toString
+    val lmCkpt = base.resolve("lm-ckpt").toString
+    val lmStream = fileStream("lm-src", lmBatches.map(_.toDF()))
+    run(StreamingLm.start(spark, lmStream, lmTable, lmCkpt))
+    uncommitBatch1(lmCkpt)
+    assert(reranBatch1(run(StreamingLm.start(spark, lmStream, lmTable, lmCkpt))))
+    val streamed = StreamingLm.model(spark, lmTable, minCount = 1L)
+      .as[(String, Double)].collect().sortBy(_._1).toSeq
+    val oneShot = graft.datapipe.LmScore.train(
+        lmBatches.flatten.toDF(), "text", minCount = 1L)
+      .as[(String, Double)].collect().sortBy(_._1).toSeq
+    assert(streamed === oneShot)
+    val counts = new graft.core.TableIO(spark, lmTable).read(StreamingLm.stage)
+      .as[(String, Long)].collect()
+    assert(counts.map(_._2).sum ===
+      lmBatches.flatten.flatMap(_.text.split("\\s+")).count(_.nonEmpty))
+
+    // StreamingKg: the replayed batch appends no triple a second time
+    val docs = Corpus.docs(cfg).toVector.take(120)
+    val m2e = CorpusData.ment2entDF(spark, cfg)
+    val av = CorpusData.avpairDF(spark, cfg)
+    val kgTable = base.resolve("kg-table").toString
+    val kgCkpt = base.resolve("kg-ckpt").toString
+    val (d0, d1) = docs.splitAt(60)
+    val kgStream = fileStream("kg-src", Seq(d0.toDF(), d1.toDF()))
+    def landed = StreamingKg.landed(spark, kgTable)
+      .select("subj", "pred", "obj").as[(String, String, String)].collect()
+    def startKg() = StreamingKg.start(spark, kgStream, m2e, av, kgTable, kgCkpt)
+    run(startKg())
+    val beforeReplay = landed.toSeq.sorted
+    uncommitBatch1(kgCkpt)
+    assert(reranBatch1(run(startKg())))
+    val after = landed.toSeq.sorted
+    assert(beforeReplay.nonEmpty)
+    assert(after === beforeReplay)
+    assert(after.distinct.length === after.length)
   }
 }

@@ -4,8 +4,47 @@
 each oracle SQL in DuckDB over the same sf dir and compares result sets
 (columns sorted by name, rows sorted, values compared with a small float
 tolerance report — strict equality is what we aim for)."""
-import sys, json, glob, math
+import sys, json, glob, math, re
 import duckdb
+
+CTE_HEAD = re.compile(r"(\w+)\s+AS\s+\(", re.I)
+CTE_SEP = re.compile(r"\s*,\s*")
+
+
+def close_paren(sql, i):
+    """Index just past the ')' closing the '(' that ends at `i`."""
+    depth, quoted = 1, False
+    while depth:
+        c = sql[i]
+        if c == "'":
+            quoted = not quoted
+        elif not quoted:
+            depth += {"(": 1, ")": -1}.get(c, 0)
+        i += 1
+    return i
+
+
+def materialize_ctes(sql):
+    """Marks every non-recursive CTE of a WITH RECURSIVE query AS MATERIALIZED.
+    DuckDB 1.0 otherwise inlines each of them at every reference, and the
+    deepest KG oracles (q_episodes, q_export_graph) run out of memory
+    re-deriving small CTEs many times over. A CTE whose body names itself is
+    recursive and stays as written; the results do not change."""
+    m = re.match(r"\s*WITH\s+RECURSIVE\s+", sql, re.I)
+    if not m:
+        return sql
+    out, i = [sql[:m.end()]], m.end()
+    while d := CTE_HEAD.match(sql, i):
+        end = close_paren(sql, d.end())
+        mat = "" if re.search(rf"\b{d.group(1)}\b", sql[d.end():end]) else "MATERIALIZED "
+        out.append(sql[i:d.end() - 1] + mat + sql[d.end() - 1:end])
+        i = end
+        if not (sep := CTE_SEP.match(sql, i)):
+            break
+        out.append(sql[i:sep.end()])
+        i = sep.end()
+    return "".join(out) + sql[i:]
+
 
 outdir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/vout"
 sfdir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
@@ -21,7 +60,7 @@ for q, sql in sorted(oracle.items()):
     try:
         spark_df = con.execute(
             f"select * from read_parquet('{outdir}/{q}/*.parquet')").fetchdf()
-        duck_df = con.execute(sql).fetchdf()
+        duck_df = con.execute(materialize_ctes(sql)).fetchdf()
     except Exception as e:
         fails.append(q); print(f"{q:24s} ERROR {str(e)[:140]}"); continue
     sc = sorted(spark_df.columns); dc = sorted(duck_df.columns)
