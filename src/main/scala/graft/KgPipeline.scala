@@ -13,7 +13,7 @@ import org.apache.spark.sql.graftbridge.SharedRows
   *        ─► text spans ─► trie mention detect ─► distinct mentions
   *        ─► KB BFS expand (broadcast dims, anti-join visited)
   *        ─► canonicalize (alias CC, salted) ─► two-phase triple dedup
-  *        ─► vertices / edges materialize
+  *        ─► vertices (+ labels of the canonical KB) / edges materialize
   *
   * Each stage optionally checkpoints through [[TableIO]] (Iceberg-style
   * snapshot + lineage manifest); a killed run resumes from the last committed
@@ -45,16 +45,27 @@ object KgPipeline {
     * shared rows. Those blocks live until the outputs are unreachable, then
     * the ContextCleaner reaps them; a lost block is recomputed from lineage.
     *
+    * Vertices carry the labels of the canonicalized KB triples
+    * ([[Canon.vertexLabels]]), built inside the vertices stage: with the
+    * fast paths on and the KB and canonical map within `dimBound` they are
+    * a driver-built table (the canonical map's bounded collect, plus the
+    * KB's when canon_map resumed; none launches a job when the KB and the
+    * map are driver-built themselves), otherwise the label dataflow. A
+    * resume whose vertices are committed builds none.
+    *
+    * Entry reap: a run first forces a GC, so that Spark's ContextCleaner
+    * frees the shuffle and broadcast state of earlier, unreachable jobs.
+    *
     * @param shufflePartitions kept for source compatibility with existing
     *   callers only: it sets no exchange width. Every exchange, the
     *   vertices/edges dedup included, starts at the session's
     *   `spark.sql.shuffle.partitions` and AQE coalesces it.
     * @param dimFastPaths when true, the dimension-bounded passes (KB BFS
-    *   closure, alias CC) use their driver fast paths within `dimBound`
-    *   (see KbExpand/Canon docs), with or without `io`. The golden P/R
-    *   suite runs with false — pure dataflow — so the gate never tests
-    *   driver code against driver code; KgParitySpec asserts both modes
-    *   emit identical triples.
+    *   closure, alias CC, vertex labels) use their driver fast paths within
+    *   `dimBound` (see KbExpand/Canon docs), with or without `io`. The
+    *   golden P/R suite runs with false — pure dataflow — so the gate never
+    *   tests driver code against driver code; KgParitySpec asserts both
+    *   modes emit identical triples and vertices.
     * @param dimBound the driver bound of every dim collect (limit N+1). It
     *   applies even with `dimFastPaths` off: the seed step collects
     *   ment2ent to build the broadcast trie, and a dictionary over the bound
@@ -66,19 +77,7 @@ object KgPipeline {
           dimBound: Long = 2000000L): Outputs = {
     val dimThreshold = if (dimFastPaths) dimBound else 0L
 
-    // Reap obsolete shuffle/broadcast state before the wide job. In a
-    // long-lived driver (notebook, streaming service, a bench loop) the
-    // references to earlier jobs' shuffles die, but with a large,
-    // pressure-free driver heap the JVM may not GC for tens of minutes —
-    // and Spark's ContextCleaner only reaps executor-side shuffle files
-    // and broadcast blocks when those driver references are COLLECTED
-    // (spark.cleaner.periodicGC.interval, default 30 min, exists for
-    // exactly this). A pipeline entry is the natural reap boundary:
-    // measured on the 4-executor scaling rig, back-to-back runs in one
-    // session degrade 22 s → 29 s → 37 s without this and hold 21-24 s
-    // with it (the accumulated state starves the fixed-size executors);
-    // the GC itself costs well under a second against a multi-second job.
-    System.gc()
+    entryReap()
 
     // Stage boundaries: snapshot commit when checkpointing. Without io the
     // corpus-side stages (normalized docs, emitted triples) stay lazy:
@@ -131,37 +130,41 @@ object KgPipeline {
     // substring detect and the dataflow BFS. The fast paths' outputs are
     // LocalRelations, which `small()` leaves as they are. The CC pass runs
     // once and is snapshot-committed: resume never re-iterates.
-    def dimStages: (DataFrame, DataFrame) = {
+    // The KB fast paths of canon_map and of the vertex labels share one
+    // bounded KB collect (`kbRows`): made on first use, so a resume past
+    // both stages makes none, and over the bound neither collects again.
+    def dimStages: (DataFrame, DataFrame, () => Option[Array[(String, String, String)]]) = {
       val kb = small(stage("kb_triples", Seq.empty) {
         val (mentions, dict) =
           Mentions.seedMentions(spark, textSpans(docs), ment2ent, dimBound)
         KbExpand.expand(spark, mentions, ment2ent, avpair, Rules.recursivePreds,
           driverThreshold = dimThreshold, m2eCollected = dict)
       })
+      lazy val kbRows = Canon.kbRows(kb, dimThreshold)
       (kb, small(stage("canon_map", Seq("kb_triples")) {
         Canon.canonicalMap(kb, Rules.categoryPred, Rules.aliasPreds,
-          ccDriverThreshold = dimThreshold)
-      }))
+          ccDriverThreshold = dimThreshold, collectedKb = Some(kbRows))
+      }), () => kbRows)
     }
 
     // weibo_triples does not depend on kb_triples → canon_map
-    val (weibo, (kb, canonMap)) = both(weiboStage, dimStages)
-
-    val kbT = kbTriples(kb)
+    val (weibo, (kb, canonMap, kbRows)) = both(weiboStage, dimStages)
 
     val deduped = stage("triples", Seq("weibo_triples", "kb_triples", "canon_map")) {
-      dedupTriples(Canon.canonicalize(weibo.unionByName(kbT), canonMap))
+      dedupTriples(Canon.canonicalize(weibo.unionByName(kbTriples(kb)), canonMap))
     }
     // io's commit already materialized the triples; otherwise share one run
     val triples = if (io.isDefined) deduped else SharedRows(deduped)
 
-    val labels = Canon.nodeLabels(
-      Canon.canonicalize(kbT, canonMap), Rules.categoryPred)
-
-    // vertices and edges read only the triples
+    // vertices read the triples and the labels (built here, beside the
+    // edges branch, and only when vertices are not yet committed); edges
+    // read only the triples
     val (vertices, edges) = both(
-      stage("vertices", Seq("triples")) {
-        GraphOut.vertices(triples, labels, shufflePartitions)
+      stage("vertices", Seq("triples", "kb_triples", "canon_map")) {
+        GraphOut.vertices(triples,
+          Canon.vertexLabels(kb, canonMap, Rules.categoryPred, dimThreshold,
+            collectedKb = Some(kbRows())),
+          shufflePartitions)
       },
       stage("edges", Seq("triples")) {
         GraphOut.edges(triples, shufflePartitions)
@@ -176,16 +179,47 @@ object KgPipeline {
       lit(null).cast("string").as("doc_id"), lit(-1).as("span_offset"))
 
   /** Two-phase dedup (SURVEY.md §4.2.5) to one row per (subj, pred, obj),
-    * keeping the min provenance: partial hash-agg per partition, then ONE
-    * shuffle hashed on the FULL key — never on subj alone: the planted hot
-    * root makes subj heavily skewed (one celebrity subject owns ~30% of
-    * repost triples) and a subj-keyed exchange creates a straggler
-    * partition. The composite key is high-cardinality and skew-free; AQE
-    * coalesces the final width. */
+    * keeping the min provenance: a partial aggregate per partition, then ONE
+    * shuffle hashed on the FULL key, then the final aggregate. Both
+    * aggregates plan as `SortAggregate`, not `HashAggregate`: `min` over the
+    * string `doc_id` has no fixed-width buffer. The shuffle is never keyed
+    * on subj alone: the planted hot root makes subj heavily skewed (one
+    * celebrity subject owns ~30% of repost triples) and a subj-keyed
+    * exchange creates a straggler partition. The composite key is
+    * high-cardinality and skew-free; AQE coalesces the final width. */
   private[graft] def dedupTriples(all: DataFrame): DataFrame =
     all.groupBy("subj", "pred", "obj")
       .agg(min(col("doc_id")).as("doc_id"),
         min(col("span_offset")).as("span_offset"))
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  private lazy val explicitGcDisabled = scala.util.Try(
+    java.lang.management.ManagementFactory
+      .getPlatformMXBean(classOf[com.sun.management.HotSpotDiagnosticMXBean])
+      .getVMOption("DisableExplicitGC").getValue == "true").getOrElse(false)
+
+  /** Reaps obsolete shuffle/broadcast state before the wide job. In a
+    * long-lived driver (notebook, streaming service, a bench loop) the
+    * references to earlier jobs' shuffles die, but with a large,
+    * pressure-free driver heap the JVM may not GC for tens of minutes — and
+    * Spark's ContextCleaner only reaps executor-side shuffle files and
+    * broadcast blocks when those driver references are COLLECTED
+    * (spark.cleaner.periodicGC.interval, default 30 min, exists for exactly
+    * this). A pipeline entry is the natural reap boundary: measured on the
+    * 4-executor scaling rig, back-to-back runs in one session degrade
+    * 22 s → 29 s → 37 s without it and hold 21-24 s with it (the
+    * accumulated state starves the fixed-size executors); the GC itself
+    * costs well under a second against a multi-second job. */
+  private def entryReap(): Unit =
+    if (explicitGcDisabled)
+      log.warn("entry reap is a no-op: -XX:+DisableExplicitGC ignores " +
+        "System.gc(), so dead shuffle and broadcast state waits for " +
+        "spark.cleaner.periodicGC.interval")
+    else {
+      val t0 = System.nanoTime()
+      System.gc()
+      log.info(f"entry reap: System.gc() took ${(System.nanoTime() - t0) / 1e6}%.0f ms")
+    }
 
   /** Evaluates two independent branches. With `parallel` they run side by
     * side: `b` on a new thread while `a` runs on the caller's, so each

@@ -382,9 +382,6 @@ object Dedup {
     bitCols.reduce((a, b) => a.bitwiseOR(b))
   }
 
-  /** Hamming distance between two simhash values. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
   /** SimHash as a dataflow — same math as [[simhash]], but the per-token
     * vote loop runs as explode → codegen'd scalar hash → ONE two-phase hash
     * aggregate (the expression form is an interpreted HOF that re-walks the

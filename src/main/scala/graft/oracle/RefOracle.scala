@@ -3,7 +3,8 @@ package graft.oracle
 import graft.core.Rules
 import graft.functions.Base62
 import graft.gen.Corpus
-import graft.stages.Canon.targetLabel
+import graft.stages.Canon
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 import scala.collection.mutable
@@ -15,7 +16,9 @@ import scala.collection.mutable
   * (subj, pred, obj) set is the P/R ≥ 0.95 gate (BASELINE.md).
   *
   * Deliberately shares NO Spark code with the pipeline — only the corpus
-  * generator, the rule tables (they are the spec) and the base62 codec.
+  * generator, the rule tables (they are the spec), the base62 codec and
+  * Canon's driver label builder (the golden gate runs the pipeline's label
+  * dataflow, so that builder still meets an independent implementation).
   */
 object RefOracle {
 
@@ -214,17 +217,12 @@ object RefOracle {
     }
 
     // --- canonicalization (deterministic closure of Neo4jIdCache.kt:8–15) ----
-    val labelMap = mutable.HashMap[String, mutable.Set[String]]()
-    def addLabel(n: String, l: String): Unit =
-      labelMap.getOrElseUpdate(n, mutable.HashSet[String]()) += l
-    val religious = kbTriples.collect {
-      case (s, p, o) if p == Rules.categoryPred && o == "宗教" => s
-    }
-    kbTriples.foreach { case (s, p, o) =>
-      if (p == Rules.categoryPred) addLabel(s, o)
-      addLabel(o, targetLabel(p, religious.contains(s)))
-    }
-    val names = labelMap.keySet.toVector.sorted
+    val labelMap = Canon.labelSets(kbTriples, Rules.categoryPred)
+    // names in Spark's string order (UTF-8 bytes = code points), which the
+    // pipeline's min/least kernels use; Java's UTF-16 `<` differs between
+    // a surrogate pair and a BMP character above U+DFFF
+    val names = labelMap.keySet.toVector.sortWith((a, b) =>
+      java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0)
     val parent = mutable.HashMap[String, String]()
     def find(x: String): String = {
       var r = x
@@ -244,7 +242,7 @@ object RefOracle {
       if (Rules.aliasPreds.contains(p)) union(s, o)
     }
     val comp = mutable.HashMap[String, String]() // root -> min member
-    names.foreach { n => // names sorted → first hit per root is the lex-min
+    names.foreach { n => // names sorted → first hit per root is the least
       val r = find(n)
       if (!comp.contains(r)) comp(r) = n
     }

@@ -1,7 +1,11 @@
 package graft.stages
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Stage 4 — entity canonicalization: alias edges → connected components.
   *
@@ -99,31 +103,34 @@ object Canon {
   @volatile private[graft] var lastCcRounds: Int = 0
 
   /** Driver union-find over a symmetric edge frame when it fits under
-    * `threshold` — ONE collect job instead of O(rounds) shuffle rounds;
-    * [[ccLogRounds]]' fast path. The size guard is folded into the
-    * collect itself (`limit(threshold+1)`, check the length — the
-    * KbExpand avpair pattern): a separate count() would cost a second full
-    * materialization of the (possibly lazy) edge subtree per call. */
+    * `threshold` — ONE bounded collect job ([[Bounded.collect]]) instead of
+    * O(rounds) shuffle rounds; [[ccLogRounds]]' fast path. */
   private def driverCc(sym: DataFrame, threshold: Long): Option[DataFrame] = {
     val spark = sym.sparkSession
     import spark.implicits._
-    val pairs = sym
-      .limit(math.min(threshold, Int.MaxValue - 2L).toInt + 1)
-      .as[(String, String)].collect()
-    if (pairs.length > threshold) return None
-    val uf = new MinRootUnionFind
-    pairs.foreach { case (a, b) => uf.union(a, b) }
-    // sym is symmetric → every node occurs as src
-    val nodes = pairs.iterator.map(_._1).toSet
-    lastCcRounds = 0
-    Some(nodes.iterator.map(n => (n, uf.find(n))).toSeq.toDF("name", "comp"))
+    Bounded.collect(sym.as[(String, String)], threshold).map { pairs =>
+      val uf = new MinRootUnionFind
+      pairs.foreach { case (a, b) => uf.union(a, b) }
+      // sym is symmetric → every node occurs as src
+      val nodes = pairs.iterator.map(_._1).toSet
+      lastCcRounds = 0
+      nodes.iterator.map(n => (n, uf.find(n))).toSeq.toDF("name", "comp")
+    }
   }
 
+  /** Spark's string order: UTF-8 bytes, as `least`, `min` and `sort_array`
+    * compare. Java's `String.compareTo` compares UTF-16 units and disagrees
+    * with it between a supplementary character (a surrogate pair) and a
+    * BMP character above U+DFFF, e.g. `𠮷` and `（`. Every driver image of
+    * a dataflow ordering uses this one. */
+  private[graft] val sparkStringOrder: Ordering[String] =
+    (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
   /** Driver union-find over names: path-compressing `find`, and `union`
-    * roots each set at its minimum name — the component label the
-    * dataflow kernels propagate. */
-  private final class MinRootUnionFind {
-    private val parent = scala.collection.mutable.HashMap[String, String]()
+    * roots each set at its minimum name in [[sparkStringOrder]] — the
+    * component label the dataflow kernels propagate. */
+  private[graft] final class MinRootUnionFind {
+    private val parent = mutable.HashMap[String, String]()
     def find(x: String): String = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent(r)
@@ -133,7 +140,7 @@ object Canon {
     }
     def union(a: String, b: String): Unit = {
       val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (sparkStringOrder.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
   }
 
@@ -236,6 +243,26 @@ object Canon {
       .unionByName(e.select(col("dst").as("name"), col("dst").as("comp")).distinct())
   }
 
+  /** name → label set of (subj, pred, obj) KB rows under the union rule:
+    * the one driver image of [[nodeLabels]] (null labels dropped, as
+    * `collect_set` drops them). [[canonicalMapLocal]], [[vertexLabels]] and
+    * the reference oracle build their labels here. */
+  private[graft] def labelSets(rows: Iterable[(String, String, String)],
+                               categoryPred: String): mutable.Map[String, mutable.Set[String]] = {
+    val labelMap = mutable.HashMap[String, mutable.Set[String]]()
+    def addLabel(n: String, l: String): Unit = {
+      val ls = labelMap.getOrElseUpdate(n, mutable.HashSet[String]())
+      if (l != null) ls += l
+    }
+    val religious = rows.collect {
+      case (s, p, o) if p == categoryPred && o == "宗教" => s }.toSet
+    rows.foreach { case (s, p, o) =>
+      if (p == categoryPred) addLabel(s, o)
+      addLabel(o, targetLabel(p, religious.contains(s)))
+    }
+    labelMap
+  }
+
   /** The driver image of the canonical-map dataflow over an already-local
     * KB triple set — labels, containment+alias union-find, non-identity
     * pairs: [[canonicalMap]]'s fast path. Returns None when the name set
@@ -245,16 +272,8 @@ object Canon {
   private def canonicalMapLocal(
       rows: Iterable[(String, String, String)], categoryPred: String,
       aliasPreds: Set[String]): Option[Seq[(String, String)]] = {
-    val labelMap = scala.collection.mutable.HashMap[String, scala.collection.mutable.Set[String]]()
-    def addLabel(n: String, l: String): Unit =
-      labelMap.getOrElseUpdate(n, scala.collection.mutable.HashSet[String]()) += l
-    val religious = rows.collect {
-      case (s, p, o) if p == categoryPred && o == "宗教" => s }.toSet
-    rows.foreach { case (s, p, o) =>
-      if (p == categoryPred) addLabel(s, o)
-      addLabel(o, targetLabel(p, religious.contains(s)))
-    }
-    val names = labelMap.keySet.toVector.sorted
+    val labelMap = labelSets(rows, categoryPred)
+    val names = labelMap.keySet.toVector
     // the quadratic containment loop is only sane for small name sets;
     // larger dictionaries use the bigram-blocked dataflow
     if (names.size > 20000) return None
@@ -266,13 +285,28 @@ object Canon {
     Some(names.map(n => (n, uf.find(n))).filter(x => x._1 != x._2))
   }
 
+  /** The (subj, pred, obj) rows of a KB triple frame on the driver, when
+    * there are at most `bound` (one [[Bounded.collect]] job); None over it,
+    * and with `bound` 0 (no job). The input of the KB fast paths of
+    * [[canonicalMap]] and [[vertexLabels]]: a caller that runs both makes
+    * this collect once and hands its result to each. */
+  def kbRows(kbTriples: DataFrame, bound: Long): Option[Array[(String, String, String)]] =
+    if (bound <= 0) None else {
+      val spark = kbTriples.sparkSession
+      import spark.implicits._
+      Bounded.collect(kbTriples.select("subj", "pred", "obj").as[(String, String, String)], bound)
+    }
+
   /** Full canonical map for a KB triple set: name → canonical name (only
-    * names whose canonical differs are returned — the join side stays small). */
+    * names whose canonical differs are returned — the join side stays small).
+    * @param collectedKb `Some(kbRows(kbTriples, ccDriverThreshold))` when
+    *   the caller already made that collect; None: the fast path makes it */
   def canonicalMap(kbTriples: DataFrame, categoryPred: String,
                    aliasPreds: Set[String],
                    ccDriverThreshold: Long = 0L,
                    labelRule: (Column, Column) => Column = unionLabelRule,
-                   precomputedLabels: Option[DataFrame] = None)
+                   precomputedLabels: Option[DataFrame] = None,
+                   collectedKb: Option[Option[Array[(String, String, String)]]] = None)
       : DataFrame = {
     // fast path: the whole alias graph derives from the KB triples, which
     // are dictionary-bounded — when they fit the driver, one collect
@@ -285,15 +319,10 @@ object Canon {
         precomputedLabels.isEmpty) {
       val spark = kbTriples.sparkSession
       import spark.implicits._
-      // size guard folded into the collect (limit N+1, check the length) —
-      // one driver job, not a count() followed by a collect()
-      val rows = kbTriples.select("subj", "pred", "obj")
-        .limit(math.min(ccDriverThreshold, Int.MaxValue - 2L).toInt + 1)
-        .as[(String, String, String)].collect()
-      if (rows.length <= ccDriverThreshold)
-        canonicalMapLocal(rows, categoryPred, aliasPreds) match {
+      collectedKb.getOrElse(kbRows(kbTriples, ccDriverThreshold))
+        .flatMap(canonicalMapLocal(_, categoryPred, aliasPreds)) match {
           case Some(cm) => return cm.toDF("name", "comp")
-          case None => () // name set too large for the quadratic loop — dataflow
+          case None => () // over the bound, or a name set too large for the quadratic loop
         }
     }
 
@@ -324,5 +353,48 @@ object Canon {
         col("pred"),
         coalesce(col("obj_c"), col("obj")).as("obj"),
         col("doc_id"), col("span_offset"))
+  }
+
+  /** Vertex labels of a canonicalized KB: [[nodeLabels]] of
+    * `canonicalize(kbTriples(kb), canonMap)` under the union rule, same
+    * rows and schema. Within `driverThreshold` it is built on the driver:
+    * the KB rows ([[kbRows]]) and `canonMap` are each collected under the
+    * bound, the rows are rewritten through the map, labelled by
+    * [[labelSets]], and returned as a `LocalRelation` whose label arrays
+    * are distinct and sorted in [[sparkStringOrder]]. The labels are
+    * bounded by the dictionary, so this replaces three KB scans, their
+    * broadcasts and aggregate exchanges with two small collects (none when
+    * `kb` and `canonMap` are already local). Over the bound, or with
+    * `driverThreshold` 0, it is that dataflow. A single-pipeline replay
+    * with its own label rule calls [[nodeLabels]] with it instead.
+    * @param collectedKb as in [[canonicalMap]]: `Some(kbRows(kb,
+    *   driverThreshold))` when the caller already made that collect */
+  def vertexLabels(kb: DataFrame, canonMap: DataFrame, categoryPred: String,
+                   driverThreshold: Long,
+                   collectedKb: Option[Option[Array[(String, String, String)]]] = None)
+      : DataFrame = {
+    val spark = kb.sparkSession
+    import spark.implicits._
+    val local = for {
+      rows <- if (driverThreshold > 0)
+        collectedKb.getOrElse(kbRows(kb, driverThreshold)) else None
+      cm <- Bounded.collect(canonMap.select("name", "comp").as[(String, String)],
+        driverThreshold)
+    } yield {
+      val comp = cm.toMap
+      def canon(x: String) = comp.getOrElse(x, x)
+      val labels = labelSets(
+        rows.map { case (s, p, o) => (canon(s), p, canon(o)) }, categoryPred)
+      val schema = StructType(Seq(
+        StructField("name", StringType,
+          kb.schema("subj").nullable || kb.schema("obj").nullable),
+        StructField("labels", ArrayType(StringType, containsNull = false),
+          nullable = false)))
+      spark.createDataFrame(labels.iterator.map { case (name, ls) =>
+        Row(name, ls.toVector.sorted(sparkStringOrder))
+      }.toSeq.asJava, schema)
+    }
+    local.getOrElse(
+      nodeLabels(canonicalize(graft.KgPipeline.kbTriples(kb), canonMap), categoryPred))
   }
 }

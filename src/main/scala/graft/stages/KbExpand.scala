@@ -89,19 +89,15 @@ object KbExpand {
     // path for KBs beyond driver memory. The fast path needs the ment2ent
     // dictionary the caller already collected (`m2eCollected`, from
     // Mentions.seedMentions' limit-N+1 probe); avpair is then collected
-    // under the same guard folded into the collect (limit N+1, check the
-    // length — one driver job, not a count() followed by a collect()). A
+    // under the same guard ([[Bounded.collect]], one driver job). A
     // caller that found ment2ent over the bound passes no dictionary, which
     // rules the fast path out: avpair is then never collected.
     if (driverThreshold > 0 && m2eCollected.isDefined) {
-      val avLimited = avpair.select("entity", "pred", "obj")
-        .limit(math.min(driverThreshold, Int.MaxValue - 2L).toInt + 1).collect()
-      if (avLimited.length <= driverThreshold) {
-        import spark.implicits._
-        // avLimited holds the COMPLETE avpair table (limit N+1 returned ≤ N)
-        val av = avLimited
-          .map(r => (r.getString(0), r.getString(1), r.getString(2)))
-          .groupBy(_._1)
+      import spark.implicits._
+      val avRows = Bounded.collect(
+        avpair.select("entity", "pred", "obj").as[(String, String, String)], driverThreshold)
+      if (avRows.isDefined) {
+        val av = avRows.get.groupBy(_._1)
         val seeds = mentions.select("mention").as[String].collect()
         // the result is built fully driver-side as a LocalRelation — no
         // join/broadcast/checkpoint jobs; each spared dim-phase job is serial

@@ -140,15 +140,14 @@ object Mentions {
                    bound: Long = 2000000L)
       : (DataFrame, Option[Map[String, Seq[String]]]) = {
     import spark.implicits._
-    val rows = ment2ent.select(col("mention"), col("entities"))
-      .limit(math.min(bound, Int.MaxValue - 2L).toInt + 1)
-      .as[(String, Seq[String])].collect()
-    val (found, dict) =
-      if (rows.length > bound)
+    val (found, dict) = Bounded.collect(
+        ment2ent.select(col("mention"), col("entities")).as[(String, Seq[String])], bound) match {
+      case None =>
         (detectBySubstring(spark, textSpans, ment2ent.select("mention")), None)
-      else
+      case Some(rows) =>
         (detect(spark, textSpans, rows.iterator.map(_._1).toSeq.distinct),
           Some(rows.toMap))
+    }
     (found.select(col("mention")).distinct(), dict)
   }
 }

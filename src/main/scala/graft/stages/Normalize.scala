@@ -22,13 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Normalize {
 
-  /** Spans in offset order — kept for the span-sequence invariant test;
-    * the normalize path no longer needs a sort (SpanFields selects the
-    * min-offset span per kind directly). Comparator-lambda array_sort is
-    * interpreted; never embed it per derived column. */
-  def spansSorted(c: Column): Column =
-    array_sort(c, (l, r) => l.getField("offset") - r.getField("offset"))
-
   /** blog/comment classifier — native codegen'd early-exit walk, not the
     * interpreted exists() HOF (one lambda dispatch per element per row on
     * the hottest filter in the pipeline; see functions.HasSpanKind). */

@@ -80,7 +80,8 @@ class KgParitySpec extends AnyFunSuite {
         val rdds = j.stageInfos.flatMap(_.rddInfos.map(_.id)).toSet
         if (rdds.contains(sentinel.id)) sentinelSeen.set(true)
         else if (rdds.contains(avRows.id))
-          j.stageInfos.map(_.name).filter(_.startsWith("collect at KbExpand"))
+          // KbExpand's bounded collect; its call site is Bounded.collect
+          j.stageInfos.map(_.name).filter(_.startsWith("collect at Bounded"))
             .foreach(avCollects.add)
       }
     }
@@ -309,6 +310,139 @@ class KgParitySpec extends AnyFunSuite {
       assert(files >= 1 && files < width,
         s"checkpointed $name: $files files at spark.sql.shuffle.partitions = $width")
     }
+  }
+
+  test("string order: the driver fast paths order names and labels as Spark does") {
+    import graft.core.Rules
+    import graft.stages.Canon
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // Java's compareTo ranks "（甲" above "𠮷甲" (U+FF08 > the surrogate
+    // U+D842); Spark's UTF-8 order ranks it below (EF BC 88 < F0 A0 AE B7)
+    assert("（甲".compareTo("𠮷甲") > 0)
+    val kb = Seq(("𠮷甲", "别名", "（甲"), ("𠮷甲", Rules.categoryPred, "𠮷类"),
+      ("𠮷甲", Rules.categoryPred, "（类")).toDF("subj", "pred", "obj")
+    def canonMap(threshold: Long) = Canon.canonicalMap(kb, Rules.categoryPred,
+        Rules.aliasPreds, ccDriverThreshold = threshold)
+      .as[(String, String)].collect().toSet
+    val dataflow = canonMap(0L)
+    assert(dataflow === Set(("𠮷甲", "（甲")))
+    assert(canonMap(1000L) === dataflow, "canonicalMap's driver fast path")
+    val edges = Seq(("𠮷甲", "（甲")).toDF("src", "dst")
+    def cc(threshold: Long) = Canon.ccLogRounds(edges, driverThreshold = threshold)
+      .as[(String, String)].collect().toSet
+    assert(cc(1000L) === cc(0L), "ccLogRounds' driver fast path")
+
+    // label arrays sorted as sort_array sorts them, in nodeLabels' schema
+    val cm = Seq(("𠮷甲", "（甲")).toDF("name", "comp")
+    val fast = Canon.vertexLabels(kb, cm, Rules.categoryPred, driverThreshold = 1000L)
+    val flow = Canon.vertexLabels(kb, cm, Rules.categoryPred, driverThreshold = 0L)
+    assert(fast.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(!flow.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(fast.schema === flow.schema)
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, Seq[String])].collect().toMap
+    assert(labels(flow)("（甲") === Seq("人物", "（类", "𠮷类"))
+    assert(labels(fast) === labels(flow))
+  }
+
+  test("KB fast paths: a caller's bounded KB collect is used, and the KB is not scanned again") {
+    import graft.core.Rules
+    import graft.stages.Canon
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val kb = Seq(("𠮷甲", "别名", "（甲"), ("𠮷甲", Rules.categoryPred, "𠮷类"),
+      ("乙", "创办人", "甲公司")).toDF("subj", "pred", "obj")
+    val rows = kb.as[(String, String, String)].collect()
+    // the same KB behind a scan that fails: any collect of it throws
+    val unscannable = spark.createDataFrame(spark.sparkContext.parallelize(Seq(0), 1)
+      .map[Row](_ => throw new IllegalStateException("the KB was scanned")), kb.schema)
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.as[(String, String)].collect().toSet
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, Seq[String])].collect().toMap
+    val cm = Seq(("𠮷甲", "（甲")).toDF("name", "comp")
+    assert(pairs(Canon.canonicalMap(unscannable, Rules.categoryPred, Rules.aliasPreds,
+        ccDriverThreshold = 1000L, collectedKb = Some(Some(rows)))) ===
+      pairs(Canon.canonicalMap(kb, Rules.categoryPred, Rules.aliasPreds)))
+
+    val expected = labels(Canon.vertexLabels(kb, cm, Rules.categoryPred, 0L))
+    val fromRows = Canon.vertexLabels(unscannable, cm, Rules.categoryPred, 1000L,
+      collectedKb = Some(Some(rows)))
+    assert(fromRows.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(labels(fromRows) === expected)
+    // a caller that found the KB over the bound: the dataflow, no collect
+    val over = Canon.vertexLabels(unscannable, cm, Rules.categoryPred, 1000L,
+      collectedKb = Some(None))
+    assert(!over.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+  }
+
+  test("vertices: driver-built labels ≡ the label dataflow, lazy and checkpointed, within and over the bound") {
+    import org.apache.spark.sql.types._
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    def vertices(fast: Boolean, bound: Long, checkpointed: Boolean) = {
+      val io = if (checkpointed)
+        Some(new TableIO(spark, Files.createTempDirectory("kgio").toString)) else None
+      val out = KgPipeline.run(spark, docs, m2e, av, io, 4,
+        dimFastPaths = fast, dimBound = bound)
+      (rows(out.vertices), io.map(_.read("vertices").schema))
+    }
+    val default = 2000000L
+    val (reference, refSchema) = vertices(fast = false, default, checkpointed = true)
+    assert(reference.exists(_(2).asInstanceOf[scala.collection.Seq[_]].size > 1),
+      "no vertex has two labels")
+    // the stored schema of the vertices snapshot
+    assert(refSchema === Some(StructType(Seq(
+      StructField("vertex_id", LongType),
+      StructField("name", StringType),
+      StructField("labels", ArrayType(StringType))))))
+    for ((fast, bound, ck) <- Seq((true, default, false), (true, default, true),
+        (false, default, false), (true, 1L, false), (true, 1L, true))) {
+      val (vs, schema) = vertices(fast, bound, ck)
+      val what = s"dimFastPaths=$fast dimBound=$bound checkpointed=$ck"
+      assert(vs == reference,
+        s"$what: only=${(vs diff reference).take(3)} referenceOnly=${(reference diff vs).take(3)}")
+      schema.foreach(s => assert(Some(s) === refSchema, what))
+    }
+  }
+
+  test("lazy vertices with driver-built labels: at most 3 jobs, no KB scan or canon_map broadcast") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val out = KgPipeline.run(spark, docs, m2e, av, shufflePartitions = 4,
+      dimFastPaths = true)
+    // the plan reads the shared triple rows and one (name, labels) table:
+    // no kb (subj, pred, obj) or canon_map (name, comp) relation
+    val leaves = out.vertices.queryExecution.optimizedPlan.collectLeaves()
+    def isLabelTable(l: LogicalPlan) = l match {
+      case r: LocalRelation => r.output.map(_.name) == Seq("name", "labels")
+      case _ => false
+    }
+    assert(leaves.exists(_.isInstanceOf[LogicalRDD]) && leaves.exists(isLabelTable) &&
+      leaves.forall(l => l.isInstanceOf[LogicalRDD] || isLabelTable(l)),
+      s"vertices leaves: $leaves")
+
+    val tag = "kg-parity-vertices"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val sentinel = spark.sparkContext.parallelize(Seq(1), 1)
+    val sentinelSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.stageInfos.exists(_.rddInfos.exists(_.id == sentinel.id))) sentinelSeen.set(true)
+        else if (Option(j.properties).exists(p =>
+            Option(p.getProperty("spark.job.tags")).exists(_.split(",").contains(tag))))
+          jobs.add(j.jobId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.addJobTag(tag)
+      try out.vertices.write.format("noop").mode("overwrite").save()
+      finally spark.sparkContext.removeJobTag(tag)
+      sentinel.count()
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!sentinelSeen.get && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sentinelSeen.get, "listener never saw the sentinel job")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.size >= 1 && jobs.size <= 3, s"vertices materialization ran jobs $jobs")
   }
 
   test("dedup + canonicalization idempotence: running twice = once") {
