@@ -35,7 +35,7 @@ object CrawlMain {
     val labels = Canon.nodeLabels(kb, Rules.categoryPred, rules.labelCol)
       .localCheckpoint()
     val canon = Canon.canonicalMap(kb, Rules.categoryPred, Rules.aliasPreds,
-      labelRule = rules.labelCol, precomputedLabels = Some(labels))
+      precomputedLabels = Some(labels))
     (kb, labels, canon)
   }
 

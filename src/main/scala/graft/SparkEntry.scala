@@ -319,10 +319,7 @@ object SparkEntry {
         .getOrElse(s.emptyDataset(Encoders.product[Sessionize.Session]).toDF())),
 
     // ---- training-data ops: text ---------------------------------------------
-    "q_dedup_exact" -> ((s, d) =>
-      t(s, d, "documents")
-        .groupBy(TextStats.fingerprint(col("text")).as("fp"))
-        .agg(count(lit(1)).as("n_dups"), min("doc_id").as("keep_id"))),
+    "q_dedup_exact" -> ((s, d) => Dedup.exactGroups(t(s, d, "documents"))),
     "q_fingerprint" -> ((s, d) =>
       t(s, d, "documents").select(col("doc_id"),
         TextStats.fingerprint(col("text")).as("fp"))),

@@ -1,7 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.types._
-
 /** Typed row shapes at stage boundaries (SURVEY.md §1.3).
   *
   * The primary input contract is the interleaved-docs table from
@@ -24,40 +22,4 @@ object Schemas {
     * HTTP API + SQLite cache (cndbpedia/APIRequestCache.kt:85–105). */
   case class Ment2Ent(mention: String, entities: Seq[String])
   case class AvPair(entity: String, pred: String, obj: String)
-
-  /** The P/R comparison unit (golden comparison is on distinct
-    * (subj, pred, obj)); doc_id/span_offset are provenance/lineage. */
-  case class Triple(subj: String, pred: String, obj: String,
-                    doc_id: String, span_offset: Int)
-
-  /** Labeled-property-graph output (reference node model:
-    * Neo4jGraph.kt:56–73; edges: extentFunctions.kt:30–38). */
-  case class Vertex(vertex_id: Long, name: String, labels: Seq[String])
-  case class Edge(src: Long, dst: Long, rel: String)
-
-  val spanType: StructType = StructType(Seq(
-    StructField("kind", StringType),
-    StructField("text", StringType),
-    StructField("media_ref", StringType),
-    StructField("offset", IntegerType)))
-
-  val docsSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType, nullable = false),
-    StructField("spans", ArrayType(spanType))))
-
-  val ment2entSchema: StructType = StructType(Seq(
-    StructField("mention", StringType, nullable = false),
-    StructField("entities", ArrayType(StringType))))
-
-  val avpairSchema: StructType = StructType(Seq(
-    StructField("entity", StringType, nullable = false),
-    StructField("pred", StringType, nullable = false),
-    StructField("obj", StringType, nullable = false)))
-
-  val triplesSchema: StructType = StructType(Seq(
-    StructField("subj", StringType, nullable = false),
-    StructField("pred", StringType, nullable = false),
-    StructField("obj", StringType, nullable = false),
-    StructField("doc_id", StringType),
-    StructField("span_offset", IntegerType)))
 }

@@ -22,22 +22,13 @@ object Dedup {
 
   // ---- MinHash + LSH ---------------------------------------------------------
 
-  /** w-shingles (word n-grams) of the token array. */
-  def shingles(text: Column, w: Int = 3): Column = {
-    val toks = TextStats.tokens(text)
-    when(size(toks) >= w,
-      transform(sequence(lit(1), size(toks) - (w - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(w)))))
-      .otherwise(array(concat_ws(" ", toks)))
-  }
-
-  /** (id, sh) — one row per w-shingle, equivalent to
-    * `explode(shingles(...))` but CODEGEN-SHAPED: the `transform` HOF is
-    * interpreted and allocates the whole shingle-string array per row
-    * before exploding; here only the (cheap) index sequence explodes and
-    * each shingle string is built by codegen'd slice+concat_ws in the
-    * post-explode projection — the dominant cost of every minhash/LSH and
-    * decontamination pass. */
+  /** (id, sh) — one row per w-shingle (word n-gram of the token array; a
+    * doc shorter than `w` is one shingle), CODEGEN-SHAPED: a `transform`
+    * HOF over the shingles would be interpreted and allocate the whole
+    * shingle-string array per row before exploding; here only the (cheap)
+    * index sequence explodes and each shingle string is built by codegen'd
+    * slice+concat_ws in the post-explode projection — the dominant cost of
+    * every minhash/LSH and decontamination pass. */
   private[datapipe] def shingleRows(docs: DataFrame, idCol: String,
                                     textCol: String, w: Int): DataFrame = {
     val toks = TextStats.tokens(col(textCol))
@@ -51,7 +42,9 @@ object Dedup {
         concat_ws(" ", slice(col("toks"), col("i"), lit(w))).as("sh"))
   }
 
-  /** MinHash signatures, (id, sig array<long>), xxhash64 family.
+  /** MinHash signatures, (id, sig array<string>), md5 family — every hash
+    * is reproducible by an external engine (the DuckDB oracle recomputes the
+    * chain verbatim).
     *
     * SHAPE MATTERS: higher-order functions (transform/aggregate) are
     * INTERPRETED — no codegen, no common-subexpression elimination — so a
@@ -60,17 +53,7 @@ object Dedup {
     * 26 s for 5 000 docs). Instead: explode shingles ONCE, hash each with
     * codegen'd scalar functions, and min-reduce with a two-phase hash
     * aggregate — identical math, map-side-combined shuffle of one narrow
-    * row per doc. */
-  def minhashSigs(docs: DataFrame, idCol: String, textCol: String,
-                  numHashes: Int, w: Int = 3): DataFrame =
-    shingleRows(docs, idCol, textCol, w)
-      .groupBy("id")
-      .agg(array((0 until numHashes).map(i =>
-        min(xxhash64(lit(i), col("sh")))): _*).as("sig"))
-
-  /** md5-family signatures, (id, sig array<string>) — every hash is
-    * reproducible by an external engine (the DuckDB oracle recomputes the
-    * chain verbatim).
+    * row per doc.
     *
     * Hash family: the i-th function is an 8-hex-char (32-bit) WINDOW of
     * md5((i/4) + "|" + shingle) — ceil(numHashes/4) md5 evaluations per
@@ -86,19 +69,9 @@ object Dedup {
           (i % 4) * 8 + 1, 8))): _*).as("sig"))
 
   /** LSH banding: split the signature into `bands` keys; docs sharing any
-    * band key are near-dup candidates. Returns (id, band, key). */
-  def lshBands(docs: DataFrame, idCol: String, textCol: String,
-               numHashes: Int = 8, bands: Int = 4, w: Int = 3): DataFrame = {
-    val rows = numHashes / bands
-    minhashSigs(docs, idCol, textCol, numHashes, w)
-      .select(col("id"), posexplode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows))))))
-      .select(col("id"), col("pos").as("band"), col("col").as("key"))
-  }
-
-  /** md5-family banding (same shape, string keys) — the band key is the md5
-    * of the '|'-joined signature slice, so the whole chain is engine-portable. */
+    * band key are near-dup candidates. Returns (id, band, key). The band key
+    * is the md5 of the '|'-joined signature slice, so the whole chain is
+    * engine-portable. */
   def lshBandsMd5(docs: DataFrame, idCol: String, textCol: String,
                   numHashes: Int = 8, bands: Int = 4, w: Int = 3): DataFrame =
     bandsOfSigs(minhashSigsMd5(docs, idCol, textCol, numHashes, w),
@@ -352,8 +325,8 @@ object Dedup {
     * fraction of agreeing slots is an unbiased estimator of the true
     * Jaccard (σ = sqrt(j(1−j)/numHashes)). Production shape: estimate
     * first, run [[jaccardVerify]] only on pairs whose estimate clears a
-    * looser bound. `sigs` is (id, sig) from [[minhashSigsMd5]]/
-    * [[minhashSigs]]; pairs are (id1, id2). */
+    * looser bound. `sigs` is (id, sig) from [[minhashSigsMd5]]; pairs are
+    * (id1, id2). */
   def minhashEstimate(pairs: DataFrame, sigs: DataFrame): DataFrame =
     pairs
       .join(sigs.select(col("id").as("id1"), col("sig").as("sig1")), Seq("id1"))
@@ -367,25 +340,12 @@ object Dedup {
 
   // ---- SimHash ----------------------------------------------------------------
 
-  /** 32-bit SimHash over tokens: per bit, sum of ±1 votes from each token's
-    * hash; bit set if the sum is positive. Token hash = first 8 md5 hex
-    * chars (engine-reproducible). Pure column expressions. */
-  def simhash(text: Column, bits: Int = 32): Column = {
-    val tokHashes = transform(TextStats.tokens(text),
-      t => conv(substring(md5(t), 1, 8), 16, 10).cast("long"))
-    val bitCols = (0 until bits).map { b =>
-      val votes = aggregate(tokHashes, lit(0),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, 1)
-          .otherwise(-1))
-      when(votes > 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bitCols.reduce((a, b) => a.bitwiseOR(b))
-  }
-
-  /** SimHash as a dataflow — same math as [[simhash]], but the per-token
-    * vote loop runs as explode → codegen'd scalar hash → ONE two-phase hash
-    * aggregate (the expression form is an interpreted HOF that re-walks the
-    * token array once per bit per row; see [[minhashSigs]]). Returns
+  /** SimHash over tokens, `bits` wide: per bit, sum of ±1 votes from each
+    * token's hash; bit set if the sum is positive. Token hash = first 8 md5
+    * hex chars (engine-reproducible). The per-token vote loop runs as
+    * explode → codegen'd scalar hash → ONE two-phase hash aggregate (an
+    * expression form would be an interpreted HOF that re-walks the token
+    * array once per bit per row; see [[minhashSigsMd5]]). Returns
     * (id, simhash). */
   def simhashAgg(docs: DataFrame, idCol: String, textCol: String,
                  bits: Int = 32): DataFrame = {

@@ -38,11 +38,6 @@ object Canon {
         when(subjIsReligion, lit("宗教")).otherwise(lit("人物")))
       .otherwise(pred)
 
-  /** The union rule as a stable function VALUE — the default `labelRule`
-    * everywhere, and the identity the driver fast path checks (it only
-    * mirrors the UNION semantics). */
-  val unionLabelRule: (Column, Column) => Column = targetLabelExpr
-
   /** Same rule for the single-threaded oracle. */
   def targetLabel(pred: String, subjIsReligion: Boolean): String = pred match {
     case "机场" | "火车站" => "交通设施"
@@ -60,7 +55,7 @@ object Canon {
     * single-pipeline replay (CrawlMain) passes its own
     * `Rules.PipelineRules.labelCol`. */
   def nodeLabels(kbTriples: DataFrame, categoryPred: String,
-                 labelRule: (Column, Column) => Column = unionLabelRule)
+                 labelRule: (Column, Column) => Column = targetLabelExpr)
       : DataFrame = {
     val cat = kbTriples.filter(col("pred") === categoryPred)
       .select(col("subj").as("name"), col("obj").as("label"))
@@ -304,7 +299,6 @@ object Canon {
   def canonicalMap(kbTriples: DataFrame, categoryPred: String,
                    aliasPreds: Set[String],
                    ccDriverThreshold: Long = 0L,
-                   labelRule: (Column, Column) => Column = unionLabelRule,
                    precomputedLabels: Option[DataFrame] = None,
                    collectedKb: Option[Option[Array[(String, String, String)]]] = None)
       : DataFrame = {
@@ -312,11 +306,11 @@ object Canon {
     // are dictionary-bounded — when they fit the driver, one collect
     // replaces the label/blocking/CC dataflow (which remains the unbounded
     // path and is parity-tested against this one in KgParitySpec)
-    // the fast path recomputes labels from kbTriples, so it must also be
-    // OFF when the caller supplies its own label frame — not just when the
-    // rule differs (a supplied frame can diverge from the recomputation)
-    if (ccDriverThreshold > 0 && (labelRule eq unionLabelRule) &&
-        precomputedLabels.isEmpty) {
+    // the fast path recomputes labels from kbTriples under the union rule,
+    // so it is OFF when the caller supplies its own label frame (a
+    // single-pipeline rule, or any frame that diverges from the
+    // recomputation)
+    if (ccDriverThreshold > 0 && precomputedLabels.isEmpty) {
       val spark = kbTriples.sparkSession
       import spark.implicits._
       collectedKb.getOrElse(kbRows(kbTriples, ccDriverThreshold))
@@ -326,8 +320,7 @@ object Canon {
         }
     }
 
-    val labels = precomputedLabels.getOrElse(
-      nodeLabels(kbTriples, categoryPred, labelRule))
+    val labels = precomputedLabels.getOrElse(nodeLabels(kbTriples, categoryPred))
     val aliasEdges = kbTriples
       .filter(col("pred").isin(aliasPreds.toSeq: _*))
       .select(col("subj").as("a"), col("obj").as("b"))

@@ -1,5 +1,6 @@
 package graft.stages
 
+import graft.core.Frontier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,18 +9,20 @@ import org.apache.spark.sql.functions._
   * Dataflow image of the reference crawl (cndbpedia/AbstractSubjectGraph.kt:
   * 17–46): startWithMention resolves mention→entities (ment2ent), skips the
   * visited set, emits every AV-pair of each new entity as a (subj, pred, obj)
-  * triple, and recurses on rule-selected relations. Here each BFS round is a
-  * fully parallel DataFrame pass:
+  * triple, and recurses on rule-selected relations. Here the visited set is
+  * a [[graft.core.Frontier.closure]] over entities, each level a fully
+  * parallel DataFrame pass:
   *
-  *   frontier mentions ──broadcast join ment2ent──► entities
-  *     ──left_anti visited──► new entities ──join avpair──► triples
-  *     ──filter(recursive pred)──► next frontier mentions
+  *   level entities ──join avpair──► filter(recursive pred) ──► mentions
+  *     ──broadcast join ment2ent──► entities ──left_anti visited──► next level
+  *
+  * and the triples are `visited ⋈ avpair`, joined once at the end.
   *
   * The expansion works on DISTINCT mentions — at 100 TB the per-doc mention
   * stream is first reduced to its (much smaller) distinct set, so KB work is
   * O(|dictionary hits|), not O(|docs|). The visited set is a DataFrame
-  * (left_anti), never driver memory; lineage is truncated with
-  * localCheckpoint each round (SURVEY.md §4.2.1).
+  * (left_anti), never driver memory; the kernel truncates lineage with
+  * localCheckpoint each level (SURVEY.md §4.2.1).
   */
 object KbExpand {
 
@@ -60,8 +63,9 @@ object KbExpand {
     * @param ment2ent  (mention, entities: array<string>) dimension
     * @param avpair    (entity, pred, obj) dimension
     * @param recursivePreds relations whose obj re-enters the frontier
-    * @param maxRounds safety bound (reference recursion is visited-bounded;
-    *                  our KB alias chains converge in ≪ 20 rounds)
+    * @param maxRounds safety bound on the entity levels (reference recursion
+    *                  is visited-bounded; our KB alias chains converge in
+    *                  ≪ 20 levels)
     * @param driverThreshold driver fast-path bound on each dim (0: dataflow only)
     * @param m2eCollected the ment2ent dimension, already collected by the
     *                  caller; the fast path runs, and ment2ent is
@@ -85,7 +89,7 @@ object KbExpand {
     // mentions). When the KB fits the driver — the same condition under
     // which it is broadcast — computing the closure in-memory costs 2 jobs
     // instead of O(rounds); this is exactly the reference's HashMap walk
-    // (AbstractSubjectGraph.kt:17–46). The dataflow loop below remains the
+    // (AbstractSubjectGraph.kt:17–46). The dataflow closure below remains the
     // path for KBs beyond driver memory. The fast path needs the ment2ent
     // dictionary the caller already collected (`m2eCollected`, from
     // Mentions.seedMentions' limit-N+1 probe); avpair is then collected
@@ -110,54 +114,29 @@ object KbExpand {
 
     // an over-bound (uncollected) dictionary must not be force-broadcast
     // either — let the planner pick the join (AQE broadcasts iff it fits)
-    val m2eJoin: DataFrame => DataFrame =
-      df => if (m2eCollected.isDefined) broadcast(df) else df
+    val m2e = if (m2eCollected.isDefined) broadcast(ment2ent) else ment2ent
 
+    // the visited set is the frontier closure over entities: level 0 is the
+    // seed mentions' entities, a step follows the recursive relations of
+    // the last level back through ment2ent (ment2ent is a broadcast
+    // dictionary — no shuffle of the frontier beyond its own distinct)
     val recPreds = recursivePreds.toSeq
-    var frontier = mentions.select(col("mention")).distinct().localCheckpoint()
-    var visited: DataFrame = null
-    var triples: DataFrame = null
-    var round = 0
-    var done = false
-
-    while (!done && round < maxRounds) {
-      // ment2ent is a broadcast dictionary (north star) — no shuffle of the
-      // frontier beyond its own distinct.
-      val ents0 = frontier
-        .join(m2eJoin(ment2ent), Seq("mention"))
+    def entities(ms: DataFrame): DataFrame =
+      ms.join(m2e, Seq("mention"))
         .select(explode(col("entities")).as("entity"))
         .distinct()
-      val ents =
-        (if (visited == null) ents0
-         else ents0.join(visited, Seq("entity"), "left_anti"))
-          .localCheckpoint()
-
-      if (ents.isEmpty) done = true
-      else {
-        // ents is checkpointed → unions over checkpointed pieces re-read
-        // cached blocks; keeping visited/frontier lazy makes the per-round
-        // blocking-job count O(1) (just the ents checkpoint), which is what
-        // keeps the BFS's parallelism-independent cost negligible.
-        visited = if (visited == null) ents else visited.union(ents)
-        // avpair is a dimension table; AQE broadcasts it when small, falls
-        // back to shuffle hash join at real KB scale.
-        val newTriples = ents.join(avpair, Seq("entity"))
-          .select(col("entity").as("subj"), col("pred"), col("obj"))
-        triples = if (triples == null) newTriples else triples.union(newTriples)
-        frontier = newTriples
-          .filter(col("pred").isin(recPreds: _*))
-          .select(col("obj").as("mention"))
-          .distinct()
-        round += 1
-      }
+    val visited = Frontier.closure(
+        entities(mentions.select(col("mention")).distinct()), "entity",
+        maxRounds - 1) { ents =>
+      entities(ents.join(avpair, Seq("entity"))
+        .filter(col("pred").isin(recPreds: _*))
+        .select(col("obj").as("mention"))
+        .distinct())
     }
-
-    if (triples == null)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("subj", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("pred", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("obj", org.apache.spark.sql.types.StringType))))
-    else triples.distinct()
+    // avpair is a dimension table; AQE broadcasts it when small, falls back
+    // to shuffle hash join at real KB scale
+    visited.join(avpair, Seq("entity"))
+      .select(col("entity").as("subj"), col("pred"), col("obj"))
+      .distinct()
   }
 }

@@ -1,5 +1,6 @@
 package graft.stages
 
+import graft.core.Frontier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,15 +12,17 @@ import org.apache.spark.sql.functions._
   * `edges(mid, parent_mid)` DataFrame; every tree metric derives from ONE
   * iterative BFS kernel that labels each node with (root, level) — so the
   * cost is O(depth) joins regardless of forest size, and each join
-  * co-partitions on the parent key. Lineage is truncated per level with
-  * localCheckpoint.
+  * co-partitions on the parent key. The BFS is a
+  * [[graft.core.Frontier.closure]] of the roots, which truncates lineage per
+  * level.
   */
 object TreeAnalytics {
 
   /** BFS kernel. Input: (mid, repost_id) rows (repost_id nullable).
-    * Output: (mid, root, level) for every node, including placeholder
-    * parents that never appeared as a mid themselves — the reference turns
-    * those into roots (Blog.kt:37–44; FromScrappyDump.kt:263–268).
+    * Output: (mid, root, level) for every node within `maxDepth` levels of
+    * its root, including placeholder parents that never appeared as a mid
+    * themselves — the reference turns those into roots (Blog.kt:37–44;
+    * FromScrappyDump.kt:263–268).
     *
     * Skew note: the corpus plants a hot root owning ~30% of all reposts, so
     * the per-level frontier join on the parent key is skewed. While the
@@ -44,45 +47,20 @@ object TreeAnalytics {
     val child2parent = e.filter(col("repost_id").isNotNull)
       .select(col("mid"), col("repost_id").as("parent"))
 
-    var labeled = roots
-      .select(col("mid"), col("mid").as("root"), lit(0).as("level"))
-      .localCheckpoint()
-    var frontier = labeled
-    var level = 0
-    var growing = true
-    // Only the per-level FRONTIER is checkpointed each round; the
-    // accumulated label set grows as a LAZY union of those materialized
-    // frontiers and is re-materialized every `foldEvery` levels just to
-    // bound the union fan-in in the anti-join plan. Checkpointing the
-    // full accumulation every level was O(depth × nodes) checkpoint
-    // writes — harmless at weibo depths, quadratic on a deep graph.
-    val foldEvery = 8
-    var pendingUnions = 0
-    while (growing && level < maxDepth) {
-      val next = child2parent
-        .join(frontier.select(col("mid").as("parent"), col("root")), Seq("parent"))
-        .select(col("mid"), col("root"), lit(level + 1).as("level"))
+    val labeled = Frontier.closure(
+        roots.select(col("mid"), col("mid").as("root"), lit(0).as("level")),
+        "mid", maxDepth) { level =>
+      child2parent
+        .join(level.select(col("mid").as("parent"), col("root"), col("level")),
+          Seq("parent"))
         // a mid can repost several parents in the dump; reference addChild
         // keeps it under each parent but identity is mid-only — the surviving
         // (root, level) must be DETERMINISTIC (min root at this level), not
         // whichever partition finished first
-        .groupBy("mid").agg(min("root").as("root"), min("level").as("level"))
-        .join(labeled.select("mid"), Seq("mid"), "left_anti")
-        .localCheckpoint()
-      if (next.isEmpty) growing = false
-      else {
-        labeled = labeled.union(next)
-        pendingUnions += 1
-        if (pendingUnions >= foldEvery) {
-          labeled = labeled.localCheckpoint()
-          pendingUnions = 0
-        }
-        frontier = next
-        level += 1
-      }
+        .groupBy("mid").agg(min("root").as("root"), min(col("level") + 1).as("level"))
     }
-    // every per-level pass is checkpointed → the edge cache is dead weight
-    // after the loop; a long-lived session running many tree jobs would
+    // every level is checkpointed → the edge cache is dead weight after
+    // the closure; a long-lived session running many tree jobs would
     // otherwise accumulate one pinned edge set per call
     e.unpersist()
     labeled

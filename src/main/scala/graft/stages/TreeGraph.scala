@@ -1,5 +1,6 @@
 package graft.stages
 
+import graft.core.Frontier
 import graft.functions.{TextExtract => TE}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -26,38 +27,30 @@ import org.apache.spark.sql.functions._
   * per occurrence), and vertex identity is the prefixed name instead of a
   * transactional integer id.
   *
-  * The subtree is an iterative frontier expansion — O(depth) equi-joins on
+  * The subtree is a [[graft.core.Frontier.closure]] — O(depth) equi-joins on
   * the parent key, never a driver recursion; at 100 TB each level is one
   * co-partitioned join.
   */
 object TreeGraph {
 
-  /** Descendant mid set of `rootMids` (inclusive) over (mid, repost_id). */
+  /** Descendant mid set of `rootMids` (inclusive) over (mid, repost_id): the
+    * [[graft.core.Frontier.closure]] of the roots under child-of. */
   def subtree(blogs: DataFrame, rootMids: Seq[String], maxDepth: Int = 64): DataFrame = {
     val spark = blogs.sparkSession
     import spark.implicits._
     val c2p = blogs.filter(col("repost_id").isNotNull)
       .select(col("mid"), col("repost_id").as("parent"))
-    var all = rootMids.toDF("mid").localCheckpoint()
-    var frontier = all
-    var level = 0
-    var growing = true
-    while (growing && level < maxDepth) {
-      val next = c2p.join(frontier.select(col("mid").as("parent")), Seq("parent"))
+    Frontier.closure(rootMids.toDF("mid"), "mid", maxDepth) { level =>
+      c2p.join(level.select(col("mid").as("parent")), Seq("parent"))
         .select("mid")
-        .join(all, Seq("mid"), "left_anti")
         .distinct()
-        .localCheckpoint()
-      if (next.isEmpty) growing = false
-      else { all = all.union(next).localCheckpoint(); frontier = next; level += 1 }
     }
-    all
   }
 
   /** (src, rel, dst) edge set of the subtree graph. `blogs` / `comments` are
     * normalized VALID rows (Normalize.blogs/.comments filtered on `valid`). */
   def edges(blogs: DataFrame, comments: DataFrame, rootMids: Seq[String]): DataFrame = {
-    val sub = subtree(blogs, rootMids).localCheckpoint()
+    val sub = subtree(blogs, rootMids) // its levels are already checkpointed
     val subBlogs = sub.join(blogs, Seq("mid"), "left") // placeholders keep null cols
 
     val repost = blogs.filter(col("repost_id").isNotNull)

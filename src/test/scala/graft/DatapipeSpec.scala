@@ -28,7 +28,7 @@ class DatapipeSpec extends AnyFunSuite {
 
   test("minhash LSH finds the planted near-dup pair, not the unrelated doc") {
     val cand = Dedup.lshCandidates(
-      Dedup.lshBands(docs, "doc_id", "text", numHashes = 8, bands = 4, w = 3))
+      Dedup.lshBandsMd5(docs, "doc_id", "text", numHashes = 8, bands = 4, w = 3))
       .as[(Long, Long)].collect().toSet
     assert(cand.contains((0L, 1L))) // identical → all bands collide
     assert(!cand.exists(p => p._1 == 3L || p._2 == 3L)) // unrelated doc clean
@@ -66,7 +66,7 @@ class DatapipeSpec extends AnyFunSuite {
   }
 
   test("simhash: near-dups at small hamming distance, unrelated far") {
-    val sh = docs.select(col("doc_id"), Dedup.simhash(col("text"), 32).as("h"))
+    val sh = Dedup.simhashAgg(docs, "doc_id", "text", 32)
       .as[(Long, Long)].collect().toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sh(0L), sh(1L)) === 0)

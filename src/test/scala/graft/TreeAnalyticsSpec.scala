@@ -1,6 +1,11 @@
 package graft
 
+import graft.core.Frontier
 import graft.stages.TreeAnalytics
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,6 +46,29 @@ class TreeAnalyticsSpec extends AnyFunSuite {
     assert(byMid("n100") === ("n100", "n000", 100))
     assert(byMid("x") === ("x", "n000", 1))
     assert(labels.forall(_._2 == "n000"))
+  }
+
+  test("a chain deeper than maxDepth stops at levels 0..maxDepth and logs one WARN") {
+    // n00 ← n01 ← … ← n12 with maxDepth 5: the closure truncates at the cap
+    val chain = (Seq(("n00", null.asInstanceOf[String])) ++
+      (1 to 12).map(i => (f"n$i%02d", f"n${i - 1}%02d"))).toDF("mid", "repost_id")
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("frontier-cap", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warns.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger(Frontier.getClass).asInstanceOf[Logger]
+    capture.start()
+    logger.addAppender(capture)
+    val labels =
+      try TreeAnalytics.rootsAndLevels(chain, maxDepth = 5)
+        .as[(String, String, Int)].collect()
+      finally logger.removeAppender(capture)
+    assert(labels.map(_._3).sorted.toSeq === (0 to 5))
+    assert(labels.toSet === (0 to 5).map(i => (f"n$i%02d", "n00", i)).toSet)
+    assert(warns.size === 1)
+    assert(warns.peek().contains("may be incomplete"))
   }
 
   test("treeDepths + depthHistogram (Blog.kt:69–78, BlogTreeAnalyze.kt:72)") {

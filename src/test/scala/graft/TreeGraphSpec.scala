@@ -31,6 +31,19 @@ class TreeGraphSpec extends AnyFunSuite {
     assert(sub === Set("r1", "a", "b", "c"))
   }
 
+  test("deep subtree: a 200-level chain is collected whole") {
+    // c000 ← c001 ← … ← c200, plus the unrelated z tree
+    val depth = 200
+    val chain = (Seq(("c000", null.asInstanceOf[String])) ++
+      (1 to depth).map(i => (f"c$i%03d", f"c${i - 1}%03d")) ++
+      Seq(("z", null.asInstanceOf[String]), ("z2", "z")))
+      .toDF("mid", "repost_id")
+    val sub = TreeGraph.subtree(chain, Seq("c000"), maxDepth = 256)
+      .as[String].collect()
+    assert(sub.length === depth + 1)
+    assert(sub.toSet === (0 to depth).map(i => f"c$i%03d").toSet)
+  }
+
   test("edge set matches the hand-computed reply/contain/when/repost/create sets") {
     val got = TreeGraph.edges(blogs, comments, Seq("r1"))
       .as[(String, String, String)].collect().toSet
