@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Materialize._
 import graft.core.Rules
 import graft.gen.{Corpus, CorpusData}
 import graft.stages.{Canon, KbExpand, Mentions}
@@ -31,9 +32,9 @@ object CrawlMain {
     // alias edges, the caller's counts) — materialize it once
     val kb = KbExpand.expand(spark, mentions, dict,
       CorpusData.avpairDF(spark, cfg), rules.recursive,
-      m2eCollected = m2e).localCheckpoint()
+      m2eCollected = m2e).cut()
     val labels = Canon.nodeLabels(kb, Rules.categoryPred, rules.labelCol)
-      .localCheckpoint()
+      .cut()
     val canon = Canon.canonicalMap(kb, Rules.categoryPred, Rules.aliasPreds,
       precomputedLabels = Some(labels))
     (kb, labels, canon)

@@ -1,9 +1,8 @@
 package graft
 
-import graft.core.{Rules, TableIO}
+import graft.core.{Materialize, Rules, TableIO}
 import graft.stages._
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SharedRows
 
@@ -85,9 +84,8 @@ object KgPipeline {
     // lock (measured: 3/32 threads busy during cache build). The one shared
     // materialization is the post-dedup triple set — thin rows, read by all
     // three outputs — so vertices and edges never re-run the corpus plan.
-    // The small dim-side stages (kb, canon_map) are checkpointed via
-    // `small()`, unless already a LocalRelation (a driver fast path's
-    // output): checkpointing that would only add jobs.
+    // The small dim-side stages (kb, canon_map) are cut via `small()`
+    // (`Materialize.cut` leaves a driver fast path's LocalRelation as it is).
     def stage(name: String, upstream: Seq[String],
               counters: => Map[String, Long] = Map.empty)
              (f: => DataFrame): DataFrame =
@@ -98,8 +96,7 @@ object KgPipeline {
     def both[A, B](a: => A, b: => B): (A, B) =
       KgPipeline.both(a, b, parallel = io.isDefined)
     def small(df: DataFrame): DataFrame =
-      if (io.isDefined || df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) df
-      else df.localCheckpoint()
+      if (io.isDefined) df else Materialize.cut(df)
 
     // quarantine metrics — the dataflow image of the reference's println
     // dead-letter paths (FromScrappyDump.kt:166, 179–182, 228–232, 296–299):
@@ -128,7 +125,7 @@ object KgPipeline {
     // ment2ent collect feeds the trie and (via m2eCollected) the closure's
     // fast path; an over-bound dictionary routes through the distributed
     // substring detect and the dataflow BFS. The fast paths' outputs are
-    // LocalRelations, which `small()` leaves as they are. The CC pass runs
+    // LocalRelations, which `small()`'s cut leaves as they are. The CC pass runs
     // once and is snapshot-committed: resume never re-iterates.
     // The KB fast paths of canon_map and of the vertex labels share one
     // bounded KB collect (`kbRows`): made on first use, so a resume past

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Materialize._
 import graft.core.{Bucketing, Rules}
 import graft.datapipe.{Dedup, Multimodal, Quantiles, Similarity, TextStats}
 import graft.gen.{Corpus, CorpusData}
@@ -37,8 +38,8 @@ object SparkEntry {
       val out = KgPipeline.run(s, CorpusData.docsDF(s, kgCfg),
         CorpusData.ment2entDF(s, kgCfg), CorpusData.avpairDF(s, kgCfg))
       // run's lazy-mode triples are already materialized once
-      kgCache = (s, out.copy(vertices = out.vertices.localCheckpoint(),
-        edges = out.edges.localCheckpoint()))
+      kgCache = (s, out.copy(vertices = out.vertices.cut(),
+        edges = out.edges.cut()))
     }
     kgCache._2
   }
@@ -109,7 +110,7 @@ object SparkEntry {
     if (scrubCache == null || (scrubCache._1 ne s) || scrubCache._2 != d)
       scrubCache = (s, d, graft.datapipe.ScrubPipeline
         .run(s, t(s, d, "documents"), "doc_id", "text")
-        .keepMap.localCheckpoint())
+        .keepMap.cut())
     scrubCache._3
   }
 
@@ -605,7 +606,7 @@ object SparkEntry {
         .groupBy("source", "lang")
         .agg(count(lit(1)).as("n_docs"),
           sum(TextStats.tokenCount(col("text")).cast("long")).as("n_tokens"))
-        .localCheckpoint()
+        .cut()
       g.crossJoin(g.agg(sum(col("n_tokens")).as("tot")))
         .select(col("source"), col("lang"), col("n_docs"), col("n_tokens"),
           round(col("n_tokens").cast("double") / col("tot"), 6).as("token_share"))

@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.core.Materialize._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -13,10 +14,10 @@ object Frontier {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Levels between re-materializations of the accumulated union: only the
-    * per-level frontier is checkpointed every level, and the union of those
+    * per-level frontier is cut every level, and the union of those
     * materialized levels is folded every `FoldEvery` levels just to bound
     * its fan-in in the anti-join plan (TreeAnalyticsSpec's 200-level chain
-    * pins this). Checkpointing the whole union every level would be
+    * pins this). Cutting the whole union every level would be
     * O(depth × nodes) writes. */
   private val FoldEvery = 8
 
@@ -24,13 +25,13 @@ object Frontier {
     * `key` an earlier level already holds. Stops at the first empty level,
     * or after `maxSteps` steps (levels 0..maxSteps); a stop at the cap with
     * a non-empty last level logs a WARN that the closure may be incomplete.
-    * Each level costs one localCheckpoint and one emptiness test. `step`
+    * Each level costs one [[Materialize.cut]] and one emptiness test. `step`
     * returns rows with `seed`'s column names.
     * @return the union of all levels (`seed`'s columns) */
   def closure(seed: DataFrame, key: String, maxSteps: Int)
              (step: DataFrame => DataFrame): DataFrame = {
     val cols = seed.columns.toIndexedSeq.map(col)
-    var level = seed.localCheckpoint()
+    var level = seed.cut()
     var all = level
     var unfolded = 0
     var steps = 0
@@ -39,12 +40,12 @@ object Frontier {
       val next = step(level)
         .join(all.select(col(key)), Seq(key), "left_anti")
         .select(cols: _*) // a using-join puts the key first
-        .localCheckpoint()
+        .cut()
       if (next.isEmpty) growing = false
       else {
         all = all.union(next)
         unfolded += 1
-        if (unfolded >= FoldEvery) { all = all.localCheckpoint(); unfolded = 0 }
+        if (unfolded >= FoldEvery) { all = all.cut(); unfolded = 0 }
         level = next
         steps += 1
       }

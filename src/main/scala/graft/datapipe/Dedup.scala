@@ -1,5 +1,6 @@
 package graft.datapipe
 
+import graft.core.Materialize._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -99,7 +100,7 @@ object Dedup {
     * near-duplication signal).
     *
     * Shape: the narrow (id, band, key) stream is materialized ONCE
-    * (localCheckpoint — at lake scale this is the staging table you'd
+    * (a `Materialize.cut` — at lake scale this is the staging table you'd
     * bucket by key hash), the count guard is a two-phase aggregate, and
     * pairs are expanded IN PLACE from cap-bounded bucket arrays — one
     * shuffle on (band, key), no self-join, no recomputation of the
@@ -112,7 +113,7 @@ object Dedup {
     * materialization job per micro-batch. */
   def lshCandidates(bandsDf: DataFrame, maxBucket: Int = 64,
                     materialize: Boolean = true): DataFrame = {
-    val b = if (materialize) bandsDf.localCheckpoint() else bandsDf
+    val b = if (materialize) bandsDf.cut() else bandsDf
     val ok = b.groupBy("band", "key")
       .agg(count(lit(1)).as("_n"))
       .filter(col("_n") <= maxBucket)
@@ -183,7 +184,7 @@ object Dedup {
          newKeys.join(spark.table(keptTable).select("fp"), Seq("fp"), "left_anti")
        else newKeys)
         .select("id", "fp")
-        .localCheckpoint() // pin results BEFORE the store grows below
+        .pin() // results fixed BEFORE the store grows below
     survivors.select("fp").write
       .mode(org.apache.spark.sql.SaveMode.Append)
       .bucketBy(spec.buckets, spec.key).sortBy(spec.key)
@@ -250,7 +251,7 @@ object Dedup {
       s"signature store must bucket on skey, got ${spec.key}")
     val spark = batch.sparkSession
     val sigs = minhashSigsMd5(batch, idCol, textCol, numHashes, w)
-      .localCheckpoint() // ONE signature pass feeds banding + both estimates
+      .cut() // ONE signature pass feeds banding + both estimates
     // NOT checkpointed: re-deriving bands from the checkpointed sigs is
     // `bands` md5 calls per doc — cheaper than materializing another copy
     // and paying its eager job (the shingle scan behind it never re-runs)
@@ -304,7 +305,7 @@ object Dedup {
     val dropped = dedupClusters(verified, driverThreshold = 2000000L)
       .filter(col("id") =!= col("keep_id")).select("id")
     val survivors = fresh.join(dropped, Seq("id"), "left_anti")
-      .localCheckpoint() // pin BEFORE the store grows below
+      .pin() // fixed BEFORE the store grows below
     // the append itself is job-atomic (commit-protocol rename), so the
     // replay guard above plus this skip make the whole batch idempotent
     if (!alreadyAppended)
@@ -615,7 +616,7 @@ object Dedup {
     // pass 1 — corpus-wide, hash-width exchange only (materialized once:
     // the stand-in for the staging table a production scrub would commit)
     val hits = decontaminateHits(docs, bench, idCol, textCol, n)
-      .localCheckpoint()
+      .cut()
     // pass 2 — re-shingle ONLY the contaminated docs to recover the
     // lexicographically-first overlapping gram (AQE broadcasts the hit-id
     // side while it fits; a skewed-leak corpus degrades to a balanced
@@ -669,7 +670,7 @@ object Dedup {
                         maxBucket: Int = 256): DataFrame = {
     val bucketed = embs.select(col(idCol).as("id"), col(vecCol).as("v"),
       Similarity.signBucket(col(vecCol), planes).as("bucket"))
-      .localCheckpoint()
+      .cut()
     val ok = bucketed.groupBy("bucket").agg(count(lit(1)).as("_n"))
       .filter(col("_n") <= maxBucket).select("bucket")
     // each id lives in exactly ONE bucket → pairs are already distinct

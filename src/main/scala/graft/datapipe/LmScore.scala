@@ -1,5 +1,6 @@
 package graft.datapipe
 
+import graft.core.Materialize._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,11 +28,11 @@ import org.apache.spark.sql.functions._
   *    than sharing a cached tokenized projection: the token arrays are
   *    CORPUS-sized, and persisting them at 100 TB means writing the lake
   *    to executor disks — strictly worse than a second columnar scan.
-  *    What IS cached is every vocab-sized reduction (word counts, bigram
-  *    counts) — the packIndex rule: persist narrow aggregates, re-scan
-  *    wide sources — and each trainer releases its cache before returning
-  *    (the trained model is materialized via localCheckpoint while the
-  *    count cache is hot), so repeated training never grows storage memory.
+  *    What IS materialized is every vocab-sized reduction (word counts,
+  *    bigram counts) — the packIndex rule: keep narrow aggregates,
+  *    re-scan wide sources — and no trainer leaves a cache behind (the
+  *    model is cut while its scoped count cache is held), so repeated
+  *    training never grows storage memory.
   */
 object LmScore {
 
@@ -46,24 +47,18 @@ object LmScore {
     }
 
   /** One corpus tokenization per trainer call, zero retained cache
-    * entries afterwards: the vocab-sized word-count aggregate is persisted
-    * only for the span between the scalar-total action and the model
-    * projection's materialization (a localCheckpoint of the PRUNED model —
-    * ~10^6 rows, executor-local blocks the ContextCleaner reclaims on GC),
-    * then unpersisted. Before this, every train/trainProbs call leaked one
-    * vocab-sized CacheManager entry for the session's lifetime. */
+    * entries afterwards: the vocab-sized word-count aggregate is scoped to
+    * the scalar-total action and the cut of the PRUNED model (~10^6 rows)
+    * built from it. */
   private def withWordCounts(ref: DataFrame, textCol: String)
-                            (build: (DataFrame, Double) => DataFrame): DataFrame = {
-    val cnt = ref
-      .select(explode(TextStats.tokens(col(textCol))).as("w"))
-      .where(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+                            (build: (DataFrame, Double) => DataFrame): DataFrame =
+    scoped(ref
+        .select(explode(TextStats.tokens(col(textCol))).as("w"))
+        .where(length(col("w")) > 0)
+        .groupBy("w").agg(count(lit(1)).as("c"))) { cnt =>
       val total = cnt.agg(sum("c")).first().getLong(0).toDouble
-      build(cnt, total).localCheckpoint()
-    } finally cnt.unpersist(blocking = false)
-  }
+      build(cnt, total).cut()
+    }
 
   /** e^-12 as a fixed decimal literal: the SAME string parses to the SAME
     * double in the engine and the oracle, where a runtime `exp(-12)` could
@@ -117,7 +112,7 @@ object LmScore {
       .select(element_at(col("tk"), col("t") - 1).as("w1"),
         element_at(col("tk"), col("t")).as("w2"))
       .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-      .localCheckpoint() // reused for the context totals — no re-scan
+      .cut() // reused for the context totals — no re-scan
     val cctx = c2.groupBy("w1").agg(sum("c2").cast("double").as("cc"))
     c2.where(col("c2") >= minCount)
       .join(cctx, Seq("w1"))

@@ -1,9 +1,9 @@
 package graft.datapipe
 
-import org.apache.spark.sql.DataFrame
+import graft.core.Materialize._
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Sequence packing for LLM training: concatenate the corpus in one fixed
   * total order (the doc id) and chunk the resulting token stream into
@@ -28,19 +28,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * Prefix sums compose across any split of a total order, so the result is
   * independent of where the range partitioner draws its boundaries — only
-  * the (order, token count, seqLen) triple matters. The narrow projection
-  * is persisted between the two phases so both see the SAME partition ids:
-  * an independently recomputed range exchange could legally re-sample
-  * different boundaries, and phase 2's pids must match the ones phase 1
-  * collected. (A lost cache block does NOT re-sample — the boundaries are
-  * baked into the shuffle dependency; recompute refetches map outputs.)
-  *
-  * Cache lifecycle: each call releases everything it pinned before
-  * returning — the narrow projection unpersists right after the phase-1
-  * collect, and the range-partitioned projection unpersists once the
-  * result is materialized (localCheckpoint in packIndex/shuffleOrder, the
-  * snapshot commit in packIncremental) — so a micro-batch stream calling
-  * these forever holds ZERO retained CacheManager entries per batch.
+  * the (order, token count, seqLen) triple matters. The same kernel ranks
+  * [[shuffleOrder]]'s permutation. Its caches are scoped to the call, so a
+  * micro-batch stream calling these forever retains ZERO CacheManager
+  * entries per batch.
   */
 object Packing {
 
@@ -52,79 +43,69 @@ object Packing {
     */
   def packIndex(docs: DataFrame, idCol: String, textCol: String,
                 seqLen: Long, parts: Int = 0,
-                baseOffset: Long = 0L): DataFrame = {
-    val (idx, caches) =
-      packIndexCached(docs, idCol, textCol, seqLen, parts, baseOffset)
-    // Materialize the ~48-byte/doc index into executor-local blocks
-    // (GC-reclaimed by the ContextCleaner, unlike CacheManager entries),
-    // then release the phase caches. Without this, every call pins a
-    // range-partitioned cache for the life of the session — the streaming
-    // micro-batch leak ADVICE flagged. The checkpoint also truncates the
-    // lineage, so downstream consumers never re-trigger the corpus scan.
-    val out = idx.localCheckpoint()
-    caches.foreach(_.unpersist(blocking = false))
-    out
-  }
+                baseOffset: Long = 0L): DataFrame =
+    // cut the ~48-byte/doc index while the caches are held, so readers
+    // never re-trigger the corpus scan
+    withPackIndex(docs, idCol, textCol, seqLen, parts, baseOffset)(_.cut())
 
-  /** Internal two-phase prefix sum; returns the lazily-planned index plus
-    * the cache(s) the plan still depends on, so callers that materialize
-    * the result themselves (e.g. [[packIncremental]]'s snapshot commit)
-    * can unpersist without paying [[packIndex]]'s localCheckpoint. */
-  private def packIndexCached(
+  /** The lazily-planned index, handed to `consume` while the caches it
+    * reads are held. */
+  private def withPackIndex[A](
       docs: DataFrame, idCol: String, textCol: String,
-      seqLen: Long, parts: Int,
-      baseOffset: Long): (DataFrame, Seq[DataFrame]) = {
+      seqLen: Long, parts: Int, baseOffset: Long)(consume: DataFrame => A): A = {
     require(seqLen > 0, s"seqLen must be positive, got $seqLen")
     require(baseOffset >= 0, s"baseOffset must be >= 0, got $baseOffset")
-    val spark = docs.sparkSession
-    val p =
-      if (parts > 0) parts
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
-    // narrow FIRST, and persist BEFORE the range partition:
-    // repartitionByRange SAMPLES its child to pick boundaries, so an
-    // unpersisted child — the full corpus scan + tokenization — would be
-    // computed twice (once for the sample pass, once for the real
-    // exchange). Persisting the ~16-byte (id, n_tokens) projection turns
-    // the sampling pass into a cached-block read. Measured (2M docs / 121M
-    // tokens, local[32]): end-to-end 18.4 s → 4.2 s (29M tokens/s).
     val narrow = docs
       .select(col(idCol),
         TextStats.tokenCount(col(textCol)).cast("long").as("n_tokens"))
       .where(col("n_tokens") > 0)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val toks = narrow
-      .repartitionByRange(p, col(idCol))
-      .withColumn("pid", spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    rankBy(narrow, Seq(col(idCol)), col("n_tokens"), parts) { toks =>
+      consume(toks
+        .withColumn("start_offset", col("before") + lit(baseOffset))
+        .withColumn("seq_first", expr(s"start_offset div $seqLen"))
+        .withColumn("seq_last",
+          expr(s"(start_offset + n_tokens - 1) div $seqLen"))
+        .withColumn("n_seqs", col("seq_last") - col("seq_first") + 1)
+        .select(idCol, "n_tokens", "start_offset", "seq_first", "seq_last",
+          "n_seqs"))
+    }
+  }
 
-    // phase 1: one row per partition → driver-side exclusive prefix sum.
-    // This collect fully materializes `toks`; `narrow`'s cache has served
-    // its one purpose (the range sampler's extra pass) and can go now — a
-    // lost `toks` block recomputes through the shuffle files, not through
-    // `narrow`.
-    val ptotals = toks.groupBy("pid").agg(sum("n_tokens").as("ptoks"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    narrow.unpersist(blocking = false)
-    val exclusive = ptotals.map(_._2).scanLeft(0L)(_ + _)
-    val baseDf = spark.createDataFrame(
-      ptotals.map(_._1).zip(exclusive).toSeq).toDF("pid", "base")
-
-    // phase 2: per-partition cumsum (P-way parallel) + broadcast bases
-    val w = Window.partitionBy("pid").orderBy(idCol)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val idx = toks
-      .join(broadcast(baseDf), "pid")
-      .withColumn("start_offset",
-        coalesce(sum("n_tokens").over(w), lit(0L)) + col("base") +
-          lit(baseOffset))
-      .withColumn("seq_first", expr(s"start_offset div $seqLen"))
-      .withColumn("seq_last",
-        expr(s"(start_offset + n_tokens - 1) div $seqLen"))
-      .withColumn("n_seqs", col("seq_last") - col("seq_first") + 1)
-      .select(idCol, "n_tokens", "start_offset", "seq_first", "seq_last",
-        "n_seqs")
-    (idx, Seq(toks))
+  /** The two-phase distributed exclusive prefix sum: `consume` gets the
+    * rows of `narrow` with `before` = the sum of `weight` over every row
+    * ahead in `order` (a total order), while both caches are held.
+    *
+    * `narrow` is persisted BEFORE the range partition, which SAMPLES its
+    * child: unpersisted, the corpus scan would run twice (measured, 2M
+    * docs / 121M tokens, local[32]: 18.4 s → 4.2 s). The range-partitioned
+    * rows are persisted so both phases see the SAME partition ids; a lost
+    * block refetches map outputs and does not re-sample. */
+  private def rankBy[A](narrow: DataFrame, order: Seq[Column], weight: Column,
+                        parts: Int)(consume: DataFrame => A): A = {
+    val spark = narrow.sparkSession
+    val p =
+      if (parts > 0) parts
+      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    scoped(narrow) { n =>
+      scoped(n.repartitionByRange(p, order: _*)
+          .withColumn("pid", spark_partition_id())) { parted =>
+        // phase 1: one row per partition → driver-side exclusive prefix
+        // sum. This collect materializes `parted`, so `narrow` goes now.
+        val totals = parted.groupBy("pid").agg(sum(weight))
+          .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+        release(n)
+        val exclusive = totals.map(_._2).scanLeft(0L)(_ + _)
+        val baseDf = spark.createDataFrame(
+          totals.map(_._1).zip(exclusive).toSeq).toDF("pid", "base")
+        // phase 2: per-partition running sum (P-way parallel) + bases
+        val w = Window.partitionBy("pid").orderBy(order: _*)
+          .rowsBetween(Window.unboundedPreceding, -1)
+        consume(parted
+          .join(broadcast(baseDf), "pid")
+          .withColumn("before",
+            coalesce(sum(weight).over(w), lit(0L)) + col("base")))
+      }
+    }
   }
 
   /** Incremental packing — the daily-crawl shape. Each batch packs only
@@ -146,20 +127,15 @@ object Packing {
       case Some(h) => docs.where(col(idCol) > h)
       case None    => docs
     }
-    // packIndexCached, not packIndex: the snapshot commit below is the
-    // materialization, so the localCheckpoint would be a wasted copy. The
-    // finally-unpersist is what keeps a long-running stream's storage
-    // memory flat — one micro-batch, zero retained cache entries.
-    val (idx, caches) = packIndexCached(fresh, idCol, textCol, seqLen,
-      parts, baseOffset = tokHwm)
-    try {
+    // the snapshot commit is the materialization; a cut would be a copy
+    withPackIndex(fresh, idCol, textCol, seqLen, parts, baseOffset = tokHwm) { idx =>
       val agg = idx.agg(max(col(idCol)).cast("long"), sum("n_tokens"))
         .collect()(0)
       if (!agg.isNullAt(0))
         io.commit(stage, idx, counters = Map(
           "id_high_water_mark" -> agg.getLong(0),
           "token_high_water_mark" -> (tokHwm + agg.getLong(1))))
-    } finally caches.foreach(_.unpersist(blocking = false))
+    }
     io.readAll(stage)
   }
 
@@ -234,49 +210,21 @@ object Packing {
     *
     * The naive spelling `row_number().over(Window.orderBy(hash))` is an
     * `Exchange SinglePartition` — the whole corpus ranked on one reducer.
-    * This is the SAME two-phase distributed rank as [[packIndex]]'s prefix
-    * sum, with row counts instead of token sums: range-partition on the
-    * hash key, collect P per-partition counts, per-partition row_number
-    * (P-way parallel) + broadcast exclusive-count bases. The hash key is
+    * This is [[packIndex]]'s two-phase prefix sum with a weight of one per
+    * row: range-partition on the hash key, collect P per-partition counts,
+    * per-partition running count (P-way parallel) + broadcast
+    * exclusive-count bases. The hash key is
     * an md5 prefix (engine-reproducible, oracle-checkable), ties broken by
     * id so the permutation is total. */
   def shuffleOrder(df: DataFrame, idCol: String, seed: Long = 42L,
                    parts: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val p =
-      if (parts > 0) parts
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // persist the narrow (id, key) projection BEFORE the range exchange —
-    // repartitionByRange samples its child (the packIndex lesson)
-    val keyed = df
-      .select(col(idCol),
-        conv(substring(md5(concat_ws("#", lit(seed), col(idCol))), 1, 15),
-          16, 10).cast("long").as("sk"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val parted = keyed
-      .repartitionByRange(p, col("sk"), col(idCol))
-      .withColumn("pid", spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the collect materializes `parted`; release `keyed` immediately
-    // (recompute of a lost `parted` block refetches shuffle files)
-    val pcounts = parted.groupBy("pid").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    keyed.unpersist(blocking = false)
-    val exclusive = pcounts.map(_._2).scanLeft(0L)(_ + _)
-    val baseDf = spark.createDataFrame(
-      pcounts.map(_._1).zip(exclusive).toSeq).toDF("pid", "base")
-    val w = Window.partitionBy("pid").orderBy(col("sk"), col(idCol))
-    // localCheckpoint the 16-byte/row permutation so `parted`'s cache can
-    // be dropped too — repeated calls (an epoch-per-seed training loop)
-    // must not each pin a corpus-width cache for the session's lifetime
-    val out = parted
-      .join(broadcast(baseDf), "pid")
-      .select(col(idCol),
-        (row_number().over(w).cast("long") - 1 + col("base"))
-          .as("shuffle_pos"))
-      .localCheckpoint()
-    parted.unpersist(blocking = false)
-    out
+    val keyed = df.select(col(idCol),
+      conv(substring(md5(concat_ws("#", lit(seed), col(idCol))), 1, 15),
+        16, 10).cast("long").as("sk"))
+    // cut the 16-byte/row permutation while the caches are held
+    rankBy(keyed, Seq(col("sk"), col(idCol)), lit(1L), parts) { ranked =>
+      ranked.select(col(idCol), col("before").as("shuffle_pos")).cut()
+    }
   }
 
   /** Per-sequence fill report: how many documents touch each training

@@ -1,5 +1,6 @@
 package graft.datapipe
 
+import graft.core.Materialize._
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 
@@ -18,19 +19,15 @@ object Profile {
     * ONE upstream pass: `hotKeys` is called on arbitrary frames (filtered /
     * joined / derived, not just scans), so the denominator must not be a
     * second `df.count()` execution of the upstream plan. The reduced
-    * (key, n) counts are persisted, the total read off them with a tiny
-    * aggregate, and the k-row report localCheckpointed so the cache can be
-    * released before returning (the LmScore.withWordCounts lifecycle). */
-  def hotKeys(df: DataFrame, keyCol: String, k: Int = 10): DataFrame = {
-    val counts = df.groupBy(col(keyCol).as("key"))
-      .agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    * (key, n) counts are scoped, the total read off them with a tiny
+    * aggregate, and the k-row report cut before they are released. */
+  def hotKeys(df: DataFrame, keyCol: String, k: Int = 10): DataFrame =
+    scoped(df.groupBy(col(keyCol).as("key"))
+        .agg(count(lit(1)).as("n"))) { counts =>
       val r = counts.agg(sum(col("n"))).collect()(0)
       val total = (if (r.isNullAt(0)) 0L else r.getLong(0)).toDouble
-      hotKeysOf(counts, total, k).localCheckpoint()
-    } finally counts.unpersist(blocking = false)
-  }
+      hotKeysOf(counts, total, k).cut()
+    }
 
   /** The lazy top-k report over already-reduced (key, n) counts — the plan
     * the no-global-sort pin inspects. */

@@ -1,5 +1,6 @@
 package graft.datapipe
 
+import graft.core.Materialize._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -200,14 +201,14 @@ object Similarity {
     val spark = corpus.sparkSession
     val data = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
       .filter(col("v").isNotNull)
-      .localCheckpoint()
+      .cut()
     // seed: the k smallest ids, numbered 0..k-1. Centroids live DRIVER-SIDE
     // for the whole loop — they are k rows by definition (the old
     // formulation broadcast them every iteration, the identical driver
     // materialization) — so each refit is ONE job (a k-row collect of the
     // two-phase per-dimension mean aggregate) and each assignment is a pure
     // BestCell projection over the checkpointed corpus: no per-iteration
-    // localCheckpoint, no posexplode fan-out exchange of N×dims rows, no
+    // cut, no posexplode fan-out exchange of N×dims rows, no
     // window. takeOrdered returns rows already sorted by the orderBy key.
     val seed: Array[Array[Double]] = data.orderBy("id").limit(k)
       .select(col("v").cast(org.apache.spark.sql.types.ArrayType(

@@ -1,5 +1,6 @@
 package graft.datapipe
 
+import graft.core.Materialize._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -119,7 +120,7 @@ object TextStats {
           greatest(size(col("toks")) - (n - 1), lit(1)))).as("i"))
       .select(col("id"), col("n_toks"), col("i"),
         concat_ws(" ", slice(col("toks"), col("i"), lit(n))).as("sh"))
-      .localCheckpoint()
+      .cut()
     val dupGrams = g.groupBy("id", "sh").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 2)
       .select("id", "sh")
@@ -207,7 +208,7 @@ object TextStats {
           greatest(size(col("toks")) - (n - 1), lit(1)))).as("i"))
       .select(col("id"), col("nt"), col("i"),
         md5(concat_ws(" ", slice(col("toks"), col("i"), lit(n)))).as("gh"))
-      .localCheckpoint()
+      .cut()
     val dup = g.groupBy("gh")
       .agg(count(lit(1)).as("c"), min(struct(col("id"), col("i"))).as("k"))
       .filter(col("c") >= 2)
@@ -270,7 +271,7 @@ object TextStats {
     val tf = docs
       .select(col(idCol).as("id"), explode(tokens(col(textCol))).as("term"))
       .groupBy("id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .cut()
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("id")
       .orderBy(col("score").desc, col("term").asc)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.core.Materialize._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** S1 — live JDBC batch source (FromScrappyDump.kt:354–358 reads MySQL
@@ -73,10 +74,11 @@ object Jdbc {
                         idCol: String, driver: String = derbyDriver): Long = {
     import org.apache.spark.sql.functions._
     val hwm = io.counterOf(stage, "high_water_mark").getOrElse(0L)
-    // one database scan: the incremental batch is pinned with localCheckpoint
-    // so the max-id probe and the snapshot write both read executor blocks
+    // one database scan, pinned: the max-id probe and the snapshot write
+    // both read the same rows, and a recompute would re-read a table that
+    // may have grown since
     val batch = readIncremental(spark, url, table, idCol, hwm, driver)
-      .localCheckpoint()
+      .pin()
     val agg = batch.agg(max(col(idCol).cast("long")), count(lit(1))).collect()(0)
     if (agg.isNullAt(0)) 0L
     else {

@@ -1,5 +1,6 @@
 package graft.stages
 
+import graft.core.Materialize._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
@@ -189,7 +190,7 @@ object Canon {
     // stable representation for the convergence signature)
     var e = e0.select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
-      .distinct().localCheckpoint()
+      .distinct().cut()
     var prev = e
     var prevSig = sig(e)
     var rounds = 0
@@ -214,7 +215,7 @@ object Canon {
         .select(col("dst").as("src"), col("m").as("dst"))
         .union(smins.select(col("src"), col("m").as("dst")))
         .distinct()
-      e = ss.localCheckpoint()
+      e = ss.cut()
       val s = sig(e)
       rounds += 1
       if (s == prevSig) {

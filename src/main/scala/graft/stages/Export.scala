@@ -1,5 +1,6 @@
 package graft.stages
 
+import graft.core.Materialize._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -76,18 +77,19 @@ object Export {
 
   /** Write the five text sinks (S14/S15). coalesce(1): export scale only. */
   def writeAll(spark: SparkSession, triples: DataFrame, outDir: String): Unit = {
-    val graph = integerGraph(spark, triples).cache()
     val names = triples.select(col("subj").as("name"))
       .union(triples.select(col("obj").as("name")))
     entityIds(names).coalesce(1)
       .write.mode("overwrite").option("sep", "\t").csv(s"$outDir/entity2id")
     relationIds(spark).coalesce(1)
       .write.mode("overwrite").option("sep", "\t").csv(s"$outDir/relation2id")
-    graph.coalesce(1)
-      .write.mode("overwrite").option("sep", "\t").csv(s"$outDir/train2id")
-    val (train, test) = trainTestSplit(graph)
-    train.coalesce(1).write.mode("overwrite").option("sep", "\t").csv(s"$outDir/train_pairs")
-    test.coalesce(1).write.mode("overwrite").option("sep", "\t").csv(s"$outDir/test_pairs")
+    scoped(integerGraph(spark, triples)) { graph =>
+      graph.coalesce(1)
+        .write.mode("overwrite").option("sep", "\t").csv(s"$outDir/train2id")
+      val (train, test) = trainTestSplit(graph)
+      train.coalesce(1).write.mode("overwrite").option("sep", "\t").csv(s"$outDir/train_pairs")
+      test.coalesce(1).write.mode("overwrite").option("sep", "\t").csv(s"$outDir/test_pairs")
+    }
   }
 
   /** Episode export (G9, DumpGraphToText.kt:242–303): per qualifying root
@@ -140,7 +142,7 @@ object Export {
         .withColumnRenamed("root", "mid"), Seq("mid"))
       .select(col("mid"), col("rid"),
         least(col("depth"), lit(depthCap)).cast("int").as("d"))
-      .localCheckpoint()
+      .cut()
 
     // exact-depth walks, one frontier expansion per capped depth bucket
     val paths = (1 to depthCap).map { d =>
@@ -185,19 +187,17 @@ object Export {
                            blogEdges: DataFrame, rootsKw: DataFrame,
                            labels: DataFrame, outDir: String): Unit = {
     writeAll(spark, triples, outDir)
-    val eps = episodesFull(blogEdges, rootsKw, labels,
-      graphEntityIds(triples)).cache()
-    // episodes.json rows mirror the reference's map shape incl. the
-    // one-path-per-episode `paths` nesting (DumpGraphToText.kt:283-290)
-    eps.select(col("from_id"), col("to_id"), col("rid"),
-        array(transform(split(col("path"), ","), _.cast("int"))).as("paths"))
-      .coalesce(1).write.mode("overwrite").json(s"$outDir/episodes")
-    val (train, test) = trainTestSplit(analyzeGraph(eps))
-    train.coalesce(1).write.mode("overwrite")
-      .option("sep", "\t").csv(s"$outDir/train_pairs_analyze")
-    test.coalesce(1).write.mode("overwrite")
-      .option("sep", "\t").csv(s"$outDir/test_pairs_analyze")
-    eps.unpersist()
-    ()
+    scoped(episodesFull(blogEdges, rootsKw, labels, graphEntityIds(triples))) { eps =>
+      // episodes.json rows mirror the reference's map shape incl. the
+      // one-path-per-episode `paths` nesting (DumpGraphToText.kt:283-290)
+      eps.select(col("from_id"), col("to_id"), col("rid"),
+          array(transform(split(col("path"), ","), _.cast("int"))).as("paths"))
+        .coalesce(1).write.mode("overwrite").json(s"$outDir/episodes")
+      val (train, test) = trainTestSplit(analyzeGraph(eps))
+      train.coalesce(1).write.mode("overwrite")
+        .option("sep", "\t").csv(s"$outDir/train_pairs_analyze")
+      test.coalesce(1).write.mode("overwrite")
+        .option("sep", "\t").csv(s"$outDir/test_pairs_analyze")
+    }
   }
 }

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * The expansion works on DISTINCT mentions — at 100 TB the per-doc mention
   * stream is first reduced to its (much smaller) distinct set, so KB work is
   * O(|dictionary hits|), not O(|docs|). The visited set is a DataFrame
-  * (left_anti), never driver memory; the kernel truncates lineage with
-  * localCheckpoint each level (SURVEY.md §4.2.1).
+  * (left_anti), never driver memory; the closure cuts lineage each level
+  * (`Materialize.cut`, SURVEY.md §4.2.1).
   */
 object KbExpand {
 

@@ -1,6 +1,7 @@
 package graft.stages
 
 import graft.core.Frontier
+import graft.core.Materialize._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,39 +33,37 @@ object TreeAnalytics {
     * session builder in this repo enables
     * `spark.sql.adaptive.skewJoin.enabled`.
     */
-  def rootsAndLevels(blogEdges: DataFrame, maxDepth: Int = 64): DataFrame = {
-    val e = blogEdges.select(col("mid"), col("repost_id")).cache()
-    val mids = e.select("mid")
-    // placeholder parents: referenced as parent, never seen as a mid
-    val placeholders = e.filter(col("repost_id").isNotNull)
-      .select(col("repost_id").as("mid")).distinct()
-      .join(mids, Seq("mid"), "left_anti")
-    // roots: no-parent rows + placeholders
-    val roots = e.filter(col("repost_id").isNull).select("mid")
-      .union(placeholders).distinct()
+  def rootsAndLevels(blogEdges: DataFrame, maxDepth: Int = 64): DataFrame =
+    // every level is cut, so the edge cache is released once the closure
+    // returns: a long-lived session running many tree jobs never
+    // accumulates one pinned edge set per call
+    scoped(blogEdges.select(col("mid"), col("repost_id"))) { e =>
+      val mids = e.select("mid")
+      // placeholder parents: referenced as parent, never seen as a mid
+      val placeholders = e.filter(col("repost_id").isNotNull)
+        .select(col("repost_id").as("mid")).distinct()
+        .join(mids, Seq("mid"), "left_anti")
+      // roots: no-parent rows + placeholders
+      val roots = e.filter(col("repost_id").isNull).select("mid")
+        .union(placeholders).distinct()
 
-    // child→parent pairs (parent may be a placeholder)
-    val child2parent = e.filter(col("repost_id").isNotNull)
-      .select(col("mid"), col("repost_id").as("parent"))
+      // child→parent pairs (parent may be a placeholder)
+      val child2parent = e.filter(col("repost_id").isNotNull)
+        .select(col("mid"), col("repost_id").as("parent"))
 
-    val labeled = Frontier.closure(
-        roots.select(col("mid"), col("mid").as("root"), lit(0).as("level")),
-        "mid", maxDepth) { level =>
-      child2parent
-        .join(level.select(col("mid").as("parent"), col("root"), col("level")),
-          Seq("parent"))
-        // a mid can repost several parents in the dump; reference addChild
-        // keeps it under each parent but identity is mid-only — the surviving
-        // (root, level) must be DETERMINISTIC (min root at this level), not
-        // whichever partition finished first
-        .groupBy("mid").agg(min("root").as("root"), min(col("level") + 1).as("level"))
+      Frontier.closure(
+          roots.select(col("mid"), col("mid").as("root"), lit(0).as("level")),
+          "mid", maxDepth) { level =>
+        child2parent
+          .join(level.select(col("mid").as("parent"), col("root"), col("level")),
+            Seq("parent"))
+          // a mid can repost several parents in the dump; reference addChild
+          // keeps it under each parent but identity is mid-only — the
+          // surviving (root, level) must be DETERMINISTIC (min root at this
+          // level), not whichever partition finished first
+          .groupBy("mid").agg(min("root").as("root"), min(col("level") + 1).as("level"))
+      }
     }
-    // every level is checkpointed → the edge cache is dead weight after
-    // the closure; a long-lived session running many tree jobs would
-    // otherwise accumulate one pinned edge set per call
-    e.unpersist()
-    labeled
-  }
 
   /** G2 — max depth per tree (Blog.kt:69–78). */
   def treeDepths(labels: DataFrame): DataFrame =
@@ -124,7 +123,7 @@ object TreeAnalytics {
           Seq("parent"))
         .select(col("mid").as("tip"), col("root"),
           concat(col("path"), array(col("mid"))).as("path"))
-        .localCheckpoint()
+        .cut()
     }
     paths.select("root", "tip", "path")
   }
@@ -156,21 +155,21 @@ object TreeAnalytics {
     // edge set at every level (at lake scale most nodes sit in shallow
     // trees; this is the difference between O(depth × |edges|) and
     // O(depth × |deep-tree edges|) join work)
-    val depths = treeDepths(labels).localCheckpoint()
+    val depths = treeDepths(labels).cut()
     val deepRoots = depths.filter(col("depth") >= 1).select("root")
     val parentOf = blogEdges.filter(col("repost_id").isNotNull)
       .select(col("mid"), col("repost_id").as("parent"))
       .join(labels.join(deepRoots, Seq("root"), "left_semi").select("mid"),
         Seq("mid"), "left_semi")
-      .localCheckpoint()
+      .cut()
     val start = deepestLeaf(labels, depths)
       .select(col("root"), col("depth"), col("leaf").as("cur"),
         array(col("leaf")).as("path"))
     // finished/active split: a depth-0 tree (or a walk that reached its
     // root) drops out of the join immediately — the per-level join's left
     // side shrinks as chains complete
-    var finished = start.filter(col("cur") === col("root")).localCheckpoint()
-    var active = start.filter(col("cur") =!= col("root")).localCheckpoint()
+    var finished = start.filter(col("cur") === col("root")).cut()
+    var active = start.filter(col("cur") =!= col("root")).cut()
     var level = 0
     while (level < maxDepth && !active.isEmpty) {
       val stepped = active
@@ -180,9 +179,9 @@ object TreeAnalytics {
           when(col("parent").isNotNull,
             concat(array(col("parent")), col("path"))).otherwise(col("path"))
             .as("path"))
-        .localCheckpoint()
+        .cut()
       finished = finished.union(stepped.filter(col("cur") === col("root")))
-      active = stepped.filter(col("cur") =!= col("root")).localCheckpoint()
+      active = stepped.filter(col("cur") =!= col("root")).cut()
       level += 1
     }
     // stranded walks (inconsistent edges — parent never reached the root)

@@ -1,6 +1,7 @@
 package graft.stages
 
 import graft.core.Frontier
+import graft.core.Materialize._
 import graft.functions.{TextExtract => TE}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -38,12 +39,15 @@ object TreeGraph {
   def subtree(blogs: DataFrame, rootMids: Seq[String], maxDepth: Int = 64): DataFrame = {
     val spark = blogs.sparkSession
     import spark.implicits._
-    val c2p = blogs.filter(col("repost_id").isNotNull)
-      .select(col("mid"), col("repost_id").as("parent"))
-    Frontier.closure(rootMids.toDF("mid"), "mid", maxDepth) { level =>
-      c2p.join(level.select(col("mid").as("parent")), Seq("parent"))
-        .select("mid")
-        .distinct()
+    // scoped: every level's step reads the child→parent pairs, which
+    // would otherwise re-run `blogs` once per level
+    scoped(blogs.filter(col("repost_id").isNotNull)
+        .select(col("mid"), col("repost_id").as("parent"))) { c2p =>
+      Frontier.closure(rootMids.toDF("mid"), "mid", maxDepth) { level =>
+        c2p.join(level.select(col("mid").as("parent")), Seq("parent"))
+          .select("mid")
+          .distinct()
+      }
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Materialize._
 import graft.core.TableIO
 import graft.datapipe.TextStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -49,7 +50,7 @@ object StreamingLm {
     * streamed model is drop-in for `LmScore.score`/`commitModel`. */
   def model(spark: SparkSession, tableDir: String,
             minCount: Long = 3L): DataFrame = {
-    val cnt = new TableIO(spark, tableDir).read(stage).localCheckpoint()
+    val cnt = new TableIO(spark, tableDir).read(stage).cut()
     val total = cnt.agg(sum("c")).first().getLong(0).toDouble
     cnt.where(col("c") >= minCount)
       .select(col("w"), log(col("c").cast("double") / total).as("logp"))

@@ -44,6 +44,22 @@ class TreeGraphSpec extends AnyFunSuite {
     assert(sub.toSet === (0 to depth).map(i => f"c$i%03d").toSet)
   }
 
+  test("subtree reads each input row once, not once per level") {
+    import org.apache.spark.sql.functions._
+    val reads = spark.sparkContext.longAccumulator("subtree input rows")
+    val counted = udf((p: String) => { reads.add(1L); p }).asNondeterministic()
+    // n0 ← n1 ← … ← n6: seven nodes, six levels below the root. Built from
+    // spark.range, not a local Seq, whose projection the optimizer would
+    // evaluate on the driver.
+    val chain = spark.range(7).select(
+      concat(lit("n"), col("id").cast("string")).as("mid"),
+      counted(when(col("id") > 0, concat(lit("n"), (col("id") - 1).cast("string"))))
+        .as("repost_id"))
+    val sub = TreeGraph.subtree(chain, Seq("n0")).as[String].collect()
+    assert(sub.toSet === (0 until 7).map(i => s"n$i").toSet)
+    assert(reads.value === 7L, s"subtree read ${reads.value} input rows for 7")
+  }
+
   test("edge set matches the hand-computed reply/contain/when/repost/create sets") {
     val got = TreeGraph.edges(blogs, comments, Seq("r1"))
       .as[(String, String, String)].collect().toSet
